@@ -457,28 +457,14 @@ class Datastream:
 
     def _append_validation_frame(self) -> DataFrame:
         """Registry (stream_id, latest_us, is_derived) as a broadcast
-        frame for bulk-append validation, cached per registry version:
-        rebuilding it from ``registry.all()`` serialized every
-        descriptor through the driver ON EVERY BATCH — O(n_streams)
-        driver work that the cache reduces to a dict lookup while the
-        registry is unchanged. (At millions of streams, swap the
-        JSON-lines registry for ``registry_table.ScalableStreamRegistry``,
-        whose ``append_validation_frame()`` reads the same three columns
-        straight from a parquet snapshot — no driver serialization at
-        any batch.)"""
-        sig = self.registry._sig
-        cached = getattr(self, "_append_reg_cache", None)
-        if cached is not None and cached[0] == sig:
-            return cached[1]
-        reg = self.spark.createDataFrame(
+        frame for bulk-append validation."""
+        return self.spark.createDataFrame(
             [
                 (d.stream_id, d.latest_us, bool(d.derive_op))
                 for d in self.registry.all()
             ],
             "stream_id string, latest_us long, is_derived boolean",
         )
-        self._append_reg_cache = (sig, reg)
-        return reg
 
     def append_dataframe(self, df: DataFrame, check_timestamp: bool = True) -> None:
         """Ingest a prepared DataFrame(stream_id, ts, value) — the bulk
@@ -1375,8 +1361,9 @@ class Datastream:
             for d in self.registry.all()
             if d.derive_op and (stream_ids is None or d.stream_id in stream_ids)
         ]
-        for d in self._topo_order(pending):
-            self._recompute_derived(d)
+        ordered = self._topo_order(pending)
+        self._recompute_levels(ordered)
+        for d in ordered:
             d.pending_backprocess = False
         self.registry.save()
 
@@ -1407,23 +1394,14 @@ class Datastream:
 
         ``changed_from_us`` maps each touched source to the earliest µs
         its data changed at (= min new ts of the append batch; appends
-        are monotonic so nothing below it moved). With it, each
-        affected derived stream recomputes only from the UTC day
-        containing its first affected output (SURVEY.md §7.3) and the
-        (stream, date)-partitioned dynamic overwrite replaces only
-        those dates. Without it (or without recorded
-        ``derive_src_state``) the recompute runs in full.
-
-        The source→derived reverse index is built in one registry scan
-        (not one scan per touched id), and a parent's recompute
-        boundary feeds its children's, so a cascade stays tail-bounded
-        all the way down."""
+        are monotonic so nothing below it moved); ``_recompute_levels``
+        turns it into tail recomputes. The source→derived reverse index
+        is built in one registry scan (not one scan per touched id)."""
         children: dict[str, list[StreamDescriptor]] = {}
         for d in self.registry.all():
             for src in d.derived_from:
                 children.setdefault(src, []).append(d)
 
-        bounds = dict(changed_from_us or {})
         affected, queue, seen = [], list(touched_stream_ids), set()
         while queue:
             sid = queue.pop()
@@ -1432,23 +1410,43 @@ class Datastream:
                     seen.add(d.stream_id)
                     affected.append(d)
                     queue.append(d.stream_id)
-        affected_ids = {d.stream_id for d in affected}
         ordered = [
             d
             for d in self._topo_order(affected)
             # _topo_order pulls in derived PARENTS for ordering; an
             # unaffected parent's data didn't change — recomputing it
             # here would be a gratuitous full recompute
-            if d.stream_id in affected_ids
+            if d.stream_id in seen
         ]
+        self._recompute_levels(
+            ordered, changed_from_us, moved=seen | set(touched_stream_ids)
+        )
+        if affected:
+            self.registry.save()
 
-        # Dependency depth: a derived-of-derived is strictly deeper
-        # than its parents, so streams AT THE SAME DEPTH are mutually
-        # independent and can recompute together. Within a depth level,
-        # streams sharing (op, granularity, recompute boundary) run as
-        # ONE set-oriented Spark job (SURVEY §7.6 "stream groups") —
-        # with thousands of same-op derived streams the per-append cost
-        # is O(distinct shapes), not O(streams).
+    def _recompute_levels(
+        self,
+        ordered: list[StreamDescriptor],
+        changed_from_us: dict[str, int] | None = None,
+        moved: set[str] | frozenset[str] = frozenset(),
+    ) -> None:
+        """Recompute ``ordered`` (topo order) depth level by depth level.
+
+        A derived-of-derived is strictly deeper than its parents, so
+        streams AT THE SAME DEPTH are mutually independent and can
+        recompute together: streams sharing (op, granularity, recompute
+        boundary) run as ONE set-oriented Spark job (SURVEY §7.6
+        "stream groups"), so with thousands of same-op derived streams
+        the per-append cost is O(distinct shapes), not O(streams).
+
+        ``changed_from_us`` (None = full recompute of everything) gives
+        the first changed µs of each changed source; ``moved`` names
+        every stream whose data changed. A stream recomputes its tail
+        from the earliest bound among its sources when every moved
+        source has one, and in full otherwise. A group's rewrite lower
+        bound feeds the next level's, so a cascade stays tail-bounded
+        all the way down."""
+        bounds = dict(changed_from_us or {})
         depth: dict[str, int] = {}
         for d in ordered:
             depth[d.stream_id] = 1 + max(
@@ -1459,61 +1457,50 @@ class Datastream:
             levels.setdefault(depth[d.stream_id], []).append(d)
 
         for lvl in sorted(levels):
-            groups: dict[tuple, list[tuple[StreamDescriptor, int | None]]] = {}
-            singles: list[tuple[StreamDescriptor, int | None]] = []
+            groups: dict[tuple, list[StreamDescriptor]] = {}
             for d in levels[lvl]:
-                # first changed µs across this stream's touched
-                # sources; a source without a bound (no batch info /
-                # no recorded state) forces a full recompute
-                src_bounds = [bounds[s] for s in d.derived_from if s in bounds]
-                known = changed_from_us is not None and all(
-                    (s in bounds)
-                    or (s not in seen and s not in touched_stream_ids)
-                    for s in d.derived_from
-                )
-                tail_from = min(src_bounds) if (src_bounds and known) else None
-                day0 = self._derive_day0(d, tail_from)
-                if d.derive_op in self._GROUPABLE_DERIVE_OPS and not (
-                    d.derive_args or {}
+                tail_from = None
+                if changed_from_us is not None and all(
+                    s in bounds or s not in moved for s in d.derived_from
                 ):
-                    g_key = (
-                        d.highest_granularity if d.derive_op == "sum" else ""
+                    tail_from = min(
+                        (bounds[s] for s in d.derived_from if s in bounds),
+                        default=None,
                     )
-                    groups.setdefault(
-                        (d.derive_op, g_key, day0), []
-                    ).append((d, tail_from))
-                else:
-                    singles.append((d, tail_from))
+                day0 = self._derive_day0(d, tail_from)
+                g_key = d.highest_granularity if d.derive_op == "sum" else ""
+                shared = (
+                    d.derive_op in self._GROUPABLE_DERIVE_OPS and not d.derive_args
+                )
+                key = (d.derive_op, g_key, day0, "" if shared else d.stream_id)
+                groups.setdefault(key, []).append(d)
 
-            for (op, _gk, day0), members in groups.items():
-                if len(members) == 1:
-                    singles.append(members[0])
-                    continue
-                descs = [d for d, _ in members]
-                out_from = self._recompute_derived_group(descs, day0)
+            for (_op, _gk, day0, _sid), descs in groups.items():
+                out_from = self._recompute_derived(descs, day0)
                 if out_from is not None:
                     for d in descs:
                         bounds[d.stream_id] = out_from
-            for d, tail_from in singles:
-                out_from = self._recompute_derived(d, changed_from_us=tail_from)
-                if out_from is not None:
-                    bounds[d.stream_id] = out_from
-        if affected:
-            self.registry.save()
 
     #: ops whose recompute is expressible as one set-oriented job over
     #: the union of member sources (single value column, no per-stream
-    #: args): aggregation fans in via a broadcast source→stream map,
-    #: window ops compute once per SOURCE then fan out via the map.
+    #: args): aggregation fans in via a source→stream map, window ops
+    #: compute once per SOURCE then fan out via the map.
+    #: Every other stream recomputes as a group of one.
     _GROUPABLE_DERIVE_OPS = frozenset({"sum", "derivative", "counter_reset"})
 
     def _derive_day0(
         self, d: StreamDescriptor, tail_from: int | None
     ) -> int | None:
-        """The UTC-day recompute boundary a tail recompute of ``d``
-        would use (None = full recompute) — mirrors
-        ``_recompute_derived``'s gating so grouped and single paths
-        agree on boundaries."""
+        """The UTC-day recompute boundary of ``d`` (None = full
+        recompute) — the one place that decides tail vs full.
+
+        A tail recompute needs a first changed µs, recorded source
+        state for every source, and a tail-safe op. Its outputs are
+        rewritten from ``day0 = floor_day(bucket_floor(tail_from))`` —
+        day floor because the dynamic overwrite replaces whole date
+        partitions, bucket floor (``sum`` only) so a partially-refilled
+        bucket is re-aggregated from all of its rows (buckets never
+        span days: the coarsest granularity is UTC-aligned Days)."""
         custom = derive_ops.CUSTOM_DERIVE_OPS.get(d.derive_op)
         tail_capable = custom.tail_safe if custom is not None else True
         if not (
@@ -1529,72 +1516,6 @@ class Datastream:
                 g.seconds * 1_000_000
             )
         return (start_us // self._DAY_US) * self._DAY_US
-
-    def _recompute_derived_group(
-        self, descs: list[StreamDescriptor], day0_us: int | None
-    ) -> int | None:
-        """Recompute a group of same-op derived streams in ONE Spark
-        job: sources scanned once, aggregation/window computed once,
-        outputs stamped via a broadcast source→stream map, and one
-        dynamic-partition overwrite replaces every member's affected
-        partitions. Returns the common rewrite lower bound."""
-        raw = self._raw_df()
-        if raw is None:
-            return None
-        op = descs[0].derive_op
-        src_ids = sorted({s for d in descs for s in d.derived_from})
-        if day0_us is not None:
-            srcs = self._derive_tail_slice(raw, src_ids, day0_us)
-        else:
-            srcs = raw.where(F.col("stream_id").isin(src_ids))
-        mapping = self.spark.createDataFrame(
-            [(s, d.stream_id) for d in descs for s in d.derived_from],
-            "src string, _out_id string",
-        )
-        if op == "sum":
-            g = granularity_by_name(descs[0].highest_granularity)
-            out = (
-                srcs.join(
-                    F.broadcast(mapping), F.col("stream_id") == F.col("src")
-                )
-                .groupBy(
-                    "_out_id", bucket_epoch(F.col("ts"), g.seconds).alias("_b")
-                )
-                .agg(F.sum("value").alias("value"))
-                .select(
-                    F.col("_out_id").alias("stream_id"),
-                    F.timestamp_seconds(F.col("_b")).alias("ts"),
-                    "value",
-                )
-            )
-        else:
-            if op == "derivative":
-                per = derive_ops.derivative(srcs).select(
-                    "stream_id", "ts", F.col("value_rate").alias("value")
-                )
-            else:  # counter_reset
-                per = derive_ops.counter_reset(srcs).select(
-                    "stream_id",
-                    "ts",
-                    F.col("reset").cast("double").alias("value"),
-                )
-            out = per.join(
-                F.broadcast(mapping), F.col("stream_id") == F.col("src")
-            ).select(F.col("_out_id").alias("stream_id"), "ts", "value")
-        if day0_us is not None:
-            out = out.where(
-                F.col("ts") >= F.timestamp_micros(F.lit(day0_us))
-            )
-        self.store.overwrite_derived(
-            out.select("stream_id", "ts", F.col("value").cast("double")),
-            [d.stream_id for d in descs],
-        )
-        for d in descs:
-            for s in d.derived_from:
-                src_d = self.registry.get(s)
-                if src_d.latest_us is not None:
-                    d.derive_src_state[s] = src_d.latest_us
-        return day0_us
 
     _DAY_US = 86_400 * 1_000_000
 
@@ -1638,119 +1559,122 @@ class Datastream:
             ctx = ctx.unionByName(deep)
         return tail.unionByName(ctx)
 
-    def _propagate_full(self) -> None:  # pragma: no cover - debug hook
-        self._propagate([d.stream_id for d in self.registry.all()])
-
     def _recompute_derived(
-        self, d: StreamDescriptor, changed_from_us: int | None = None
+        self, descs: list[StreamDescriptor], day0_us: int | None
     ) -> int | None:
-        """Recompute one derived stream; returns the µs lower bound of
-        rewritten output rows (None = everything rewritten).
+        """Recompute a group of derived streams in ONE Spark job and one
+        dynamic-partition overwrite of every member's affected
+        partitions; returns the rewrite lower bound ``day0_us`` (None =
+        everything rewritten).
 
-        Tail mode (``changed_from_us`` given): outputs are rewritten
-        from ``day0 = floor_day(bucket_floor(changed_from_us))`` — day
-        floor because the dynamic overwrite replaces whole date
-        partitions, bucket floor so a partially-refilled bucket is
-        re-aggregated from all of its rows (buckets never span days:
-        the coarsest granularity is UTC-aligned Days)."""
+        Groupable ops (``_GROUPABLE_DERIVE_OPS``) scan the sources once,
+        aggregate or window once per SOURCE, and fan each source row out
+        to its member streams via a source→streams map — a source listed
+        twice in one ``derive_from`` counts once. Any other stream is a
+        group of one."""
         raw = self._raw_df()
         if raw is None:
             return None
-        g = granularity_by_name(d.highest_granularity)
-        args = d.derive_args or {}
-        value_src = args.get("value_stream") or d.derived_from[0]
-        reset_src = args.get("reset_stream")
-        src_ids = list(d.derived_from)
-
-        custom = derive_ops.CUSTOM_DERIVE_OPS.get(d.derive_op)
-        tail_capable = custom.tail_safe if custom is not None else True
-        out_from_us: int | None = None
-        if (
-            tail_capable
-            and changed_from_us is not None
-            and all(s in d.derive_src_state for s in src_ids)
-        ):
-            start_us = changed_from_us
-            if d.derive_op == "sum":
-                start_us = (start_us // (g.seconds * 1_000_000)) * (
-                    g.seconds * 1_000_000
-                )
-            day0_us = (start_us // self._DAY_US) * self._DAY_US
-            srcs_all = self._derive_tail_slice(raw, src_ids, day0_us)
-            out_from_us = day0_us
+        op = descs[0].derive_op
+        g = granularity_by_name(descs[0].highest_granularity)
+        src_ids = sorted({s for d in descs for s in d.derived_from})
+        if day0_us is not None:
+            srcs = self._derive_tail_slice(raw, src_ids, day0_us)
         else:
-            srcs_all = raw.where(F.col("stream_id").isin(src_ids))
-        srcs = srcs_all.where(F.col("stream_id").isin(d.derived_from))
+            srcs = raw.where(F.col("stream_id").isin(src_ids))
 
-        if d.derive_op == "sum":
-            out = (
-                srcs.groupBy(
-                    bucket_epoch(F.col("ts"), g.seconds).alias("_b")
-                )
-                .agg(F.sum("value").alias("value"))
-                .select(
-                    F.lit(d.stream_id).alias("stream_id"),
-                    F.timestamp_seconds(F.col("_b")).alias("ts"),
-                    "value",
-                )
+        if op in self._GROUPABLE_DERIVE_OPS:
+            # the source→stream map travels as a plan literal (the
+            # optimizer folds from_json of a literal): a broadcast of a
+            # driver-built frame would cost one Spark job per recompute
+            fan: dict[str, list[str]] = {}
+            for d in descs:
+                for s in dict.fromkeys(d.derived_from):
+                    fan.setdefault(s, []).append(d.stream_id)
+            out_ids = F.from_json(
+                F.lit(json.dumps(fan)), "map<string, array<string>>"
             )
-        elif d.derive_op == "derivative":
-            out = derive_ops.derivative(srcs).select(
-                F.lit(d.stream_id).alias("stream_id"), "ts",
-                F.col("value_rate").alias("value"),
-            )
-        elif d.derive_op == "counter_reset":
-            out = derive_ops.counter_reset(srcs).select(
-                F.lit(d.stream_id).alias("stream_id"), "ts",
-                F.col("reset").cast("double").alias("value"),
-            )
-        elif d.derive_op == "counter_derivative":
-            vals = srcs_all.where(F.col("stream_id") == value_src)
-            if reset_src:
-                resets = srcs_all.where(F.col("stream_id") == reset_src).select(
-                    F.lit(value_src).alias("stream_id"), "ts", "value"
+            if op == "sum":
+                per = srcs
+            elif op == "derivative":
+                per = derive_ops.derivative(srcs).select(
+                    "stream_id", "ts", F.col("value_rate").alias("value")
                 )
-                marked = derive_ops.apply_reset_stream(
-                    vals.select("stream_id", "ts", "value"), resets
+            else:  # counter_reset
+                per = derive_ops.counter_reset(srcs).select(
+                    "stream_id", "ts", F.col("reset").cast("double").alias("value")
                 )
-                rated = derive_ops.counter_derivative(
-                    marked.withColumn(
+            out = per.select(
+                F.explode(out_ids[F.col("stream_id")]).alias("stream_id"),
+                "ts",
+                "value",
+            )
+            if op == "sum":
+                out = (
+                    out.groupBy(
                         "stream_id",
-                        F.concat_ws("#", "stream_id", "reset_epoch"),
-                    ),
-                    max_value=args.get("max_value"),
+                        bucket_epoch(F.col("ts"), g.seconds).alias("_b"),
+                    )
+                    .agg(F.sum("value").alias("value"))
+                    .select(
+                        "stream_id",
+                        F.timestamp_seconds(F.col("_b")).alias("ts"),
+                        "value",
+                    )
+                )
+        else:
+            (d,) = descs  # the group key holds the stream id
+            args = d.derive_args or {}
+            custom = derive_ops.CUSTOM_DERIVE_OPS.get(op)
+            if op == "counter_derivative":
+                value_src = args.get("value_stream") or d.derived_from[0]
+                reset_src = args.get("reset_stream")
+                vals = srcs.where(F.col("stream_id") == value_src)
+                if reset_src:
+                    resets = srcs.where(F.col("stream_id") == reset_src).select(
+                        F.lit(value_src).alias("stream_id"), "ts", "value"
+                    )
+                    marked = derive_ops.apply_reset_stream(
+                        vals.select("stream_id", "ts", "value"), resets
+                    )
+                    rated = derive_ops.counter_derivative(
+                        marked.withColumn(
+                            "stream_id",
+                            F.concat_ws("#", "stream_id", "reset_epoch"),
+                        ),
+                        max_value=args.get("max_value"),
+                    )
+                else:
+                    rated = derive_ops.counter_derivative(
+                        vals, max_value=args.get("max_value")
+                    )
+                out = rated.select(
+                    F.lit(d.stream_id).alias("stream_id"), "ts",
+                    F.col("value_rate").alias("value"),
+                )
+            elif custom is not None:
+                out = custom.fn(srcs, g, args).select(
+                    F.lit(d.stream_id).alias("stream_id"),
+                    "ts",
+                    F.col("value").cast("double").alias("value"),
                 )
             else:
-                rated = derive_ops.counter_derivative(
-                    vals, max_value=args.get("max_value")
-                )
-            out = rated.select(
-                F.lit(d.stream_id).alias("stream_id"), "ts",
-                F.col("value_rate").alias("value"),
-            )
-        elif custom is not None:
-            out = custom.fn(srcs, g, args).select(
-                F.lit(d.stream_id).alias("stream_id"),
-                "ts",
-                F.col("value").cast("double").alias("value"),
-            )
-        else:
-            raise UnsupportedDeriveOperator(d.derive_op)
+                raise UnsupportedDeriveOperator(op)
 
-        if out_from_us is not None:
+        if day0_us is not None:
             # context rows produced outputs below day0 — those
             # partitions are NOT being rewritten; drop their rows
-            out = out.where(F.col("ts") >= F.timestamp_micros(F.lit(out_from_us)))
-
+            out = out.where(F.col("ts") >= F.timestamp_micros(F.lit(day0_us)))
         self.store.overwrite_derived(
             out.select("stream_id", "ts", F.col("value").cast("double")),
-            [d.stream_id],
+            [d.stream_id for d in descs],
         )
-        for s in src_ids:
-            src_d = self.registry.get(s)
-            if src_d.latest_us is not None:
-                d.derive_src_state[s] = src_d.latest_us
-        return out_from_us
+        for d in descs:
+            for s in d.derived_from:
+                src_d = self.registry.get(s)
+                if src_d.latest_us is not None:
+                    d.derive_src_state[s] = src_d.latest_us
+        return day0_us
 
 
 def _raw_schema():

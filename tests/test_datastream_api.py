@@ -416,9 +416,9 @@ def test_propagate_skips_unaffected_parent(ds, spark):
     recomputed = []
     orig = Datastream._recompute_derived
 
-    def spy(self, d, *args, **kw):
-        recomputed.append(d.stream_id)
-        return orig(self, d, *args, **kw)
+    def spy(self, descs, *args, **kw):
+        recomputed.extend(d.stream_id for d in descs)
+        return orig(self, descs, *args, **kw)
 
     Datastream._recompute_derived = spy
     try:
@@ -965,6 +965,97 @@ def test_propagation_grouping_preserves_multi_source_and_cascade(ds, monkeypatch
     assert [p["v"] for p in ds.get_data(d_ab, Granularity.Seconds)] == [
         2.0, 2.0, 14.0,
     ]
+
+
+def test_grouped_sum_counts_a_repeated_source_once(ds):
+    """A source listed twice in one ``sum`` stream's ``derive_from``
+    counts once, whether the stream recomputes grouped with another
+    ``sum`` (first append: ``aa`` and ``bb`` share one job) or alone
+    (second append: only ``a`` moved) — the same per-bucket values a
+    one-at-a-time recompute gives."""
+    a = _mk_stream(ds, name="a")
+    b = _mk_stream(ds, name="b")
+    ds.append_multiple(
+        [
+            {"stream_id": s, "value": float(i + 1), "timestamp": T0 + dt.timedelta(seconds=i)}
+            for i in range(3)
+            for s in (a, b)
+        ]
+    )
+    aa = ds.ensure_stream(
+        {"name": "aa"}, derive_from=[a, a], derive_op="sum",
+        highest_granularity=Granularity.Seconds,
+    )
+    ds.ensure_stream(
+        {"name": "bb"}, derive_from=[b], derive_op="sum",
+        highest_granularity=Granularity.Seconds,
+    )
+
+    def values(sid):
+        return [(p["t"], p["v"]) for p in ds.get_data(sid, Granularity.Seconds)]
+
+    ds.append_multiple(
+        [
+            {"stream_id": s, "value": 10.0, "timestamp": T0 + dt.timedelta(seconds=3)}
+            for s in (a, b)
+        ]
+    )
+    assert values(aa) == values(a)
+    ds.append_multiple(
+        [{"stream_id": a, "value": 20.0, "timestamp": T0 + dt.timedelta(seconds=4)}]
+    )
+    assert values(aa) == values(a)
+    incremental = values(aa)
+    ds.backprocess_streams([aa])  # one-at-a-time full recompute
+    assert values(aa) == incremental
+
+
+def test_backprocess_groups_same_op_streams_into_one_job(ds, monkeypatch):
+    """backprocess_streams recomputes same-op streams as ONE job per
+    (op, granularity) group, with the values a per-stream recompute
+    gives."""
+    n = 3
+    srcs = [_mk_stream(ds, name=f"src{i}") for i in range(n)]
+    ds.append_multiple(
+        [
+            {"stream_id": s, "value": float(i * k), "timestamp": T0 + dt.timedelta(seconds=k)}
+            for i, s in enumerate(srcs)
+            for k in range(4)
+        ]
+    )
+    derived = [
+        ds.ensure_stream(
+            {"name": f"{op}{i}"}, derive_from=[srcs[i]], derive_op=op,
+            highest_granularity=Granularity.Seconds, derive_backprocess=False,
+        )
+        for op in ("sum", "derivative")
+        for i in range(n)
+    ]
+
+    writes = []
+    orig = ds.store.overwrite_derived
+
+    def counting(df, stream_ids):
+        writes.append(list(stream_ids))
+        return orig(df, stream_ids)
+
+    monkeypatch.setattr(ds.store, "overwrite_derived", counting)
+    ds.backprocess_streams()
+    assert len(writes) == 2, writes
+    assert sorted(map(len, writes)) == [n, n]
+    grouped = {
+        sid: [(p["t"], p["v"]) for p in ds.get_data(sid, Granularity.Seconds)]
+        for sid in derived
+    }
+    for i in range(n):
+        assert [v for _, v in grouped[derived[i]]] == [float(i * k) for k in range(4)]
+        assert [v for _, v in grouped[derived[n + i]]] == [float(i)] * 3
+
+    for sid in derived:  # per-stream recompute: a group of one each
+        ds.backprocess_streams([sid])
+        got = [(p["t"], p["v"]) for p in ds.get_data(sid, Granularity.Seconds)]
+        assert got == grouped[sid], sid
+    assert len(writes) == 2 + 2 * n
 
 
 def test_get_data_fill_surface(ds):
