@@ -189,6 +189,8 @@ class Datastream:
         self._buffer: list[dict] = []
         #: pre-aggregated appends, keyed by granularity name (F3)
         self._preagg_buffer: dict[str, list[dict]] = {}
+        #: (raw handle, derived handle, their union) — see ``_raw_df``
+        self._raw_union: tuple | None = None
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     # ------------------------------------------------------------------
@@ -537,23 +539,29 @@ class Datastream:
     # S4: reads (lifecycle E2)
     # ------------------------------------------------------------------
 
-    def _raw_df(self, include_derived: bool = True) -> DataFrame | None:
+    def _raw_df(self) -> DataFrame | None:
+        """Raw datapoints with the derived streams unioned in. The union
+        is built once per pair of table handles (``TableStore.read``
+        reuses a handle until its table changes)."""
         self.flush() if self._buffer else None
         raw = self.store.read("datapoints")
-        if include_derived:
-            derived = self.store.read("datapoints_derived")
-            if derived is not None:
-                # p_date comes from the partition column (not recomputed
-                # from ts) so date filters prune derived scans too
-                derived = derived.select(
-                    "stream_id", "ts", "value",
-                    F.col("value").cast("decimal(38,9)").alias("value_dec"),
-                    F.lit(None).cast("string").alias("value_json"),
-                    F.col("p_date").cast("string").alias("p_date"),
-                    F.lit(0).alias("stream_bucket"),
-                )
-                raw = derived if raw is None else raw.unionByName(derived)
-        return raw
+        derived = self.store.read("datapoints_derived")
+        if derived is None:
+            return raw
+        cached = self._raw_union
+        if cached is None or cached[0] is not raw or cached[1] is not derived:
+            # p_date comes from the partition column (not recomputed
+            # from ts) so date filters prune derived scans too
+            sel = derived.select(
+                "stream_id", "ts", "value",
+                F.col("value").cast("decimal(38,9)").alias("value_dec"),
+                F.lit(None).cast("string").alias("value_json"),
+                F.col("p_date").cast("string").alias("p_date"),
+                F.lit(0).alias("stream_bucket"),
+            )
+            cached = (raw, derived, sel if raw is None else raw.unionByName(sel))
+            self._raw_union = cached
+        return cached[2]
 
     def get_data(
         self,
@@ -926,8 +934,9 @@ class Datastream:
             hi = (e_ep // g.seconds) * g.seconds if preagg else e_ep
             if lo >= hi:
                 continue
-            levels: dict[int, DataFrame] = {}
-            # materialized levels, watermark-gated per group
+            # usable levels (duration -> table), watermark-gated per
+            # group before any table is opened
+            usable: dict[int, str] = {}
             for lv in GRANULARITIES:
                 # (.seconds comparisons: the ladder's __lt__ is inverted
                 # — finer sorts greater — so stay explicit here)
@@ -935,9 +944,6 @@ class Datastream:
                     continue  # raw serves at and below the stored level
                 if preagg and lv.seconds < g.seconds:
                     continue  # finer than stored: nothing materialized
-                tbl = self.store.read(f"rollup_{lv.name}")
-                if tbl is None:
-                    continue
                 need_until = (hi // lv.seconds) * lv.seconds
                 wm_ok = all(
                     d.downsampled_until.get(lv.name, -(2**62)) >= need_until
@@ -947,36 +953,15 @@ class Datastream:
                 # the group's own level needs no watermark
                 if not wm_ok and not (preagg and lv == g):
                     continue
-                levels[lv.seconds] = prune(tbl, lv.seconds).where(
-                    F.col("stream_id").isin(sids)
-                )
-            if not preagg:
-                raw = self._raw_df()
-                if raw is None and not levels:
-                    continue
-                if raw is not None:
-                    point = prune(raw, 1).where(F.col("stream_id").isin(sids))
-                    one = F.lit(1).cast("bigint")
-                    levels[1] = point.select(
-                        "stream_id",
-                        (F.unix_micros("ts") / 1_000_000)
-                        .cast("bigint")
-                        .alias("bucket_epoch"),
-                        F.when(F.col("value").isNotNull(), one)
-                        .otherwise(F.lit(0).cast("bigint"))
-                        .alias("v_count"),
-                        F.col("value").alias("v_sum"),
-                        F.col("value").alias("v_min"),
-                        F.col("value").alias("v_max"),
-                        (F.col("value") * F.col("value")).alias("v_sum_squares"),
-                        one.alias("t_count"),
-                        F.col("ts").alias("t_first"),
-                        F.col("ts").alias("t_last"),
-                        F.unix_micros("ts").alias("t_sum_micros"),
-                    )
-            if not levels:
+                if self.store.exists(f"rollup_{lv.name}"):
+                    usable[lv.seconds] = f"rollup_{lv.name}"
+            if not preagg and any(
+                self.store.exists(t) for t in ("datapoints", "datapoints_derived")
+            ):
+                usable[1] = "datapoints"  # raw + derived, via _raw_df
+            if not usable:
                 continue
-            finest_d = min(levels)
+            finest_d = min(usable)
             if lo % finest_d or hi % finest_d:
                 # no raw available: round bounds to the finest
                 # materialized level, matching get_data's rounding
@@ -984,6 +969,14 @@ class Datastream:
                 hi = (hi // finest_d) * finest_d
                 if lo >= hi:
                     continue
+            # frames only for the levels the minimal cover reads
+            levels: dict[int, DataFrame] = {}
+            for d_secs, _, _ in rollup_route.range_cover(lo, hi, usable):
+                if d_secs in levels:
+                    continue
+                src = self._raw_df() if d_secs == 1 else self.store.read(usable[d_secs])
+                part = prune(src, d_secs).where(F.col("stream_id").isin(sids))
+                levels[d_secs] = _points_as_buckets(part) if d_secs == 1 else part
             unions.append(
                 rollup_route.segment_union(levels, lo, hi, key="stream_id")
             )
@@ -1690,16 +1683,29 @@ def _preagg_schema():
         [
             T.StructField("stream_id", T.StringType(), False),
             T.StructField("bucket_epoch", T.LongType(), False),
-            T.StructField("v_count", T.LongType(), True),
-            T.StructField("v_sum", T.DoubleType(), True),
-            T.StructField("v_min", T.DoubleType(), True),
-            T.StructField("v_max", T.DoubleType(), True),
-            T.StructField("v_sum_squares", T.DoubleType(), True),
-            T.StructField("t_count", T.LongType(), True),
-            T.StructField("t_first", T.TimestampType(), True),
-            T.StructField("t_last", T.TimestampType(), True),
-            T.StructField("t_sum_micros", T.LongType(), True),
+            *rollup_ops.MERGE_FIELDS,
         ]
+    )
+
+
+def _points_as_buckets(df: DataFrame) -> DataFrame:
+    """Raw points as one-point merge-form buckets (``aggregate_range``'s
+    1-second level)."""
+    one = F.lit(1).cast("bigint")
+    return df.select(
+        "stream_id",
+        (F.unix_micros("ts") / 1_000_000).cast("bigint").alias("bucket_epoch"),
+        F.when(F.col("value").isNotNull(), one)
+        .otherwise(F.lit(0).cast("bigint"))
+        .alias("v_count"),
+        F.col("value").alias("v_sum"),
+        F.col("value").alias("v_min"),
+        F.col("value").alias("v_max"),
+        (F.col("value") * F.col("value")).alias("v_sum_squares"),
+        one.alias("t_count"),
+        F.col("ts").alias("t_first"),
+        F.col("ts").alias("t_last"),
+        F.unix_micros("ts").alias("t_sum_micros"),
     )
 
 

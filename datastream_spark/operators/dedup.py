@@ -787,8 +787,10 @@ def ngram_jaccard_pairs(
                     " + ".join(f"bit_count(w{i})" for i in range(n_words))
                 ).cast("long"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
+        # the eager checkpoint was freq's last reader
+        freq.unpersist()
         from ..functions import spread
 
         wide = spread(wide)
@@ -815,7 +817,10 @@ def ngram_jaccard_pairs(
         verified = pairs.withColumn("n_inter", n_inter)
     else:
         # Sparse regime (real corpora): the prefix filter actually
-        # prunes, candidates are few, verify by set intersection.
+        # prunes, candidates are few, verify by set intersection. The
+        # result stays lazy, so it re-derives freq from its lineage
+        # rather than pin a cache entry past this call.
+        freq.unpersist()
         ranked = sh.join(F.broadcast(freq), "shingle").join(
             F.broadcast(sizes), id_col
         )

@@ -22,8 +22,9 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..granularity import Granularity, bucket_epoch
 
@@ -148,6 +149,48 @@ def merge_rollup_aggs() -> list[Column]:
         ds.merge(F.col(f"v_{ds.name}")).alias(f"v_{ds.name}")
         for ds in CUSTOM_DOWNSAMPLERS.values()
     ]
+
+
+#: Merge-form columns, in the order ``raw_rollup_aggs`` and
+#: ``merge_rollup_aggs`` emit them.
+MERGE_FIELDS = [
+    T.StructField("v_count", T.LongType()),
+    T.StructField("v_sum", T.DoubleType()),
+    T.StructField("v_min", T.DoubleType()),
+    T.StructField("v_max", T.DoubleType()),
+    T.StructField("v_sum_squares", T.DoubleType()),
+    T.StructField("t_count", T.LongType()),
+    T.StructField("t_first", T.TimestampType()),
+    T.StructField("t_last", T.TimestampType()),
+    T.StructField("t_sum_micros", T.LongType()),
+]
+
+#: Data columns of every ``rollup_<g>`` file, in the order the writers
+#: emit them: ``bucket_epoch``, the merge forms, then what
+#: ``finish_columns`` adds. The store reads rollup tables with this
+#: schema instead of inferring one.
+ROLLUP_SCHEMA = T.StructType(
+    [
+        T.StructField("bucket_epoch", T.LongType()),
+        *MERGE_FIELDS,
+        T.StructField("v_mean", T.DoubleType()),
+        T.StructField("v_std_dev", T.DoubleType()),
+        T.StructField("t_mean", T.TimestampType()),
+    ]
+)
+
+
+def rollup_schema(spark: SparkSession) -> T.StructType:
+    """``ROLLUP_SCHEMA`` plus the columns of registered custom
+    downsamplers. Only their aggregates know those types, so with any
+    registered the schema is the analysed output of the cascade
+    writer's plan over an empty frame (analysis only, no Spark job):
+    ``v_<name>`` after ``t_sum_micros``, finish columns at the end."""
+    if not CUSTOM_DOWNSAMPLERS:
+        return ROLLUP_SCHEMA
+    empty = spark.createDataFrame([], "stream_id string, ts timestamp, value double")
+    out = rollup_from_raw(empty, Granularity.Seconds10).drop("stream_id")
+    return T.StructType([T.StructField(f.name, f.dataType) for f in out.schema])
 
 
 def finish_columns(df: DataFrame) -> DataFrame:

@@ -33,21 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollup import finish_columns, merge_rollup_aggs
+from .rollup import MERGE_FIELDS, finish_columns, merge_rollup_aggs
 
 #: The merge-form columns every level frame must carry (rollup.py
 #: raw_rollup_aggs/merge_rollup_aggs output shape).
-MERGE_COLS = [
-    "v_count",
-    "v_sum",
-    "v_min",
-    "v_max",
-    "v_sum_squares",
-    "t_count",
-    "t_first",
-    "t_last",
-    "t_sum_micros",
-]
+MERGE_COLS = [f.name for f in MERGE_FIELDS]
 
 
 def range_cover(

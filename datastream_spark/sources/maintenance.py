@@ -56,6 +56,7 @@ def purge_deleted_streams(store: TableStore, live_stream_ids: list[str],
             continue
         kept = df.join(F.broadcast(live), "stream_id", "left_semi")
         _swap_partition(kept, ppath)
+        store.invalidate(table)
         rewritten += 1
     return rewritten
 
@@ -73,13 +74,16 @@ def compact_table(store: TableStore, table: str = "datapoints",
             continue
         df = spark.read.parquet(ppath).coalesce(COMPACT_TARGET_FILES)
         _swap_partition(df, ppath)
+        store.invalidate(table)
         compacted += 1
     return compacted
 
 
 def _swap_partition(df, ppath: str) -> None:
     """Write df to a staging dir, then atomically replace the partition
-    directory (rename is atomic within a filesystem)."""
+    directory (rename is atomic within a filesystem). The swap bypasses
+    ``TableStore``'s writers, so callers ``invalidate`` the table after
+    it."""
     staging = ppath + "._staging"
     df.write.mode("overwrite").parquet(staging)
     old = ppath + "._old"

@@ -16,6 +16,11 @@ Layout under a store root:
 At 100 TB: date partitions bound every incremental job's input; the
 optional ``stream_bucket`` column (hash(stream_id) % N) is the hook for
 bucketing/co-location so per-stream windows avoid a full shuffle.
+
+Reads are planned once per table version: every table is read with a
+declared schema (``table_schema``), so no schema-inference job runs, and
+the resulting DataFrame is reused until the table changes (see
+``TableStore``).
 """
 
 from __future__ import annotations
@@ -25,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.rollup import rollup_schema
 
 RAW_SCHEMA = T.StructType(
     [
@@ -36,8 +43,72 @@ RAW_SCHEMA = T.StructType(
     ]
 )
 
+_P_DATE = T.StructField("p_date", T.DateType())
+_STREAM_ID = T.StructField("stream_id", T.StringType())
+
+#: Read schemas: the files' data columns in write order, then the
+#: partition columns, all nullable — what parquet inference returns.
+DATAPOINTS_SCHEMA = T.StructType(
+    [
+        *(T.StructField(f.name, f.dataType) for f in RAW_SCHEMA),
+        T.StructField("stream_bucket", T.IntegerType()),
+        _P_DATE,
+    ]
+)
+DERIVED_SCHEMA = T.StructType(
+    [
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("value", T.DoubleType()),
+        _STREAM_ID,
+        _P_DATE,
+    ]
+)
+
+
+def table_schema(spark: SparkSession, table: str) -> T.StructType:
+    """The declared read schema of a store table."""
+    if table == "datapoints":
+        return DATAPOINTS_SCHEMA
+    if table == "datapoints_derived":
+        return DERIVED_SCHEMA
+    if table.startswith("rollup_"):
+        return T.StructType([*rollup_schema(spark), _P_DATE, _STREAM_ID])
+    raise ValueError(f"unknown store table {table!r}")
+
+
+#: (session, absolute table path) -> (version, schema, DataFrame): one
+#: read handle per table, shared by every TableStore in the process.
+_HANDLES: dict[tuple[SparkSession, str], tuple[tuple, T.StructType, DataFrame]] = {}
+
+
+def _version(path: str) -> tuple[int, int | None]:
+    """Version marker of a table directory: its mtime, plus that of the
+    streaming sink's ``_spark_metadata/`` log when there is one. Every
+    Spark batch commit creates and removes ``_temporary`` or
+    ``.spark-staging-*`` in the table directory, and maintenance renames
+    partitions there, so each moves the directory's mtime; the sink
+    commits into its log."""
+    meta = os.path.join(path, "_spark_metadata")
+    meta_ns = os.stat(meta).st_mtime_ns if os.path.isdir(meta) else None
+    return os.stat(path).st_mtime_ns, meta_ns
+
 
 class TableStore:
+    """Reads and writes of one store root.
+
+    Handle contract: ``read`` returns one DataFrame per table version.
+    The DataFrame holds the table's file listing, so it is reused only
+    while the table is unchanged:
+
+    - writes through any ``TableStore`` of this process (and the
+      maintenance rewrites) drop the handle exactly, via ``invalidate``;
+    - writes that bypass the store (other processes, a streaming sink)
+      are caught by a version marker checked on every read: the table
+      directory's ``st_mtime_ns`` (see ``_version``). That needs a filesystem with nanosecond mtimes; on
+      a coarser one, a commit landing in the same tick as a read could
+      stay unseen until the next write.
+    """
+
     def __init__(self, spark: SparkSession, root: str, n_stream_buckets: int = 32):
         self.spark = spark
         self.root = root
@@ -57,7 +128,21 @@ class TableStore:
     def read(self, table: str) -> DataFrame | None:
         if not self.exists(table):
             return None
-        return self.spark.read.parquet(self.path(table))
+        path = os.path.abspath(self.path(table))
+        schema = table_schema(self.spark, table)
+        # marker before listing: a commit racing the listing shows up as
+        # a new version on the next read
+        version = _version(path)
+        hit = _HANDLES.get((self.spark, path))
+        if hit is not None and hit[0] == version and hit[1] == schema:
+            return hit[2]
+        df = self.spark.read.schema(schema).parquet(path)
+        _HANDLES[(self.spark, path)] = (version, schema, df)
+        return df
+
+    def invalidate(self, table: str) -> None:
+        """Drop the cached read handle of ``table``."""
+        _HANDLES.pop((self.spark, os.path.abspath(self.path(table))), None)
 
     def append_raw(self, df: DataFrame) -> None:
         """Append datapoints, adding the date partition and bucket cols."""
@@ -71,6 +156,7 @@ class TableStore:
             )
         )
         out.write.mode("append").partitionBy("p_date").parquet(self.path("datapoints"))
+        self.invalidate("datapoints")
 
     def overwrite_derived(self, df: DataFrame, stream_ids: list[str]) -> None:
         """Idempotent recompute: dynamic partition overwrite replaces
@@ -87,6 +173,7 @@ class TableStore:
             .partitionBy("stream_id", "p_date")
             .parquet(self.path("datapoints_derived"))
         )
+        self.invalidate("datapoints_derived")
 
     def _rollup_partitioned(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -99,9 +186,11 @@ class TableStore:
         (user-supplied bucket rows at the stream's own highest level).
         Same (p_date, stream_id) layout as ``overwrite_rollup`` so both
         writers share one partition scheme per table."""
+        table = f"rollup_{granularity_name}"
         self._rollup_partitioned(df).write.mode("append").partitionBy(
             "p_date", "stream_id"
-        ).parquet(self.path(f"rollup_{granularity_name}"))
+        ).parquet(self.path(table))
+        self.invalidate(table)
 
     def write_bucketed(
         self,
@@ -163,11 +252,13 @@ class TableStore:
         file per partition dir, which is also what keeps the
         downstream ladder scans from dying of file-listing overhead at
         scale."""
+        table = f"rollup_{granularity_name}"
         (
             self._rollup_partitioned(df)
             .repartition("p_date", "stream_id")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("p_date", "stream_id")
-            .parquet(self.path(f"rollup_{granularity_name}"))
+            .parquet(self.path(table))
         )
+        self.invalidate(table)

@@ -65,6 +65,37 @@ def test_ngram_jaccard_exact(spark, docs):
     assert all(j >= 0.8 for j in got.values())
 
 
+def test_ngram_jaccard_releases_its_frequency_cache(spark, docs):
+    """The shingle-frequency table is cached only while the call needs
+    it: on the sparse path nothing stays persisted, on the bitmap path
+    only the local checkpoint the result reads."""
+    import random
+
+    def persistent():
+        # ids, not a count: the context cleaner may drop earlier tests'
+        # RDDs at any moment
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    rng = random.Random(7)
+    sparse = spark.createDataFrame(
+        [
+            (i, "".join(rng.choice("abcdefghijklmnopqrstuvwxyz ") for _ in range(400)))
+            for i in range(60)
+        ],
+        "doc_id long, text string",
+    )
+    before = persistent()
+    pairs = dedup.ngram_jaccard_pairs(sparse, k=5, threshold=0.8)
+    assert not persistent() - before
+    assert pairs.count() == 0
+    assert not persistent() - before
+
+    before = persistent()
+    pairs = dedup.ngram_jaccard_pairs(docs, k=3, threshold=0.8)
+    assert len(persistent() - before) == 1
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} >= {(1, 2)}
+
+
 def test_simhash_near_dup(spark, docs):
     fps = dedup.simhash(docs, bits=32)
     fp = {r["doc_id"]: r["simhash"] for r in fps.collect()}
