@@ -45,7 +45,7 @@ from .granularity import (
 )
 from .operators import derive as derive_ops
 from .operators import rollup as rollup_ops
-from .registry import StreamDescriptor, StreamRegistry
+from .registry import StreamDescriptor, StreamRegistry, TableStreamRegistry
 from .sources.tables import TableStore
 
 _FUTURE_TOLERANCE_S = 600  # reference rejects far-future appends [MED]
@@ -171,16 +171,17 @@ class Datastream:
         root: str,
         registry_backend: str = "jsonl",
     ):
-        """``registry_backend``: ``"jsonl"`` (driver-local JSON-lines
-        file — the reference-parity default, right for thousands of
-        streams) or ``"table"`` (manifest-table delta log with
-        O(dirty) saves — the millions-of-streams path, SCALE.md §1).
-        The whole API surface is identical on both."""
+        """``registry_backend``: ``"jsonl"`` (``StreamRegistry``, a
+        driver-local JSON-lines file — the reference-parity default,
+        right for thousands of streams) or ``"table"``
+        (``TableStreamRegistry``, a manifest-table delta log with
+        O(dirty) saves and lazy hydration — the millions-of-streams
+        path, SCALE.md §1). Both are one class hierarchy with one
+        find-or-create, find and delete, so the whole API surface is
+        identical on both."""
         self.spark = spark
         self.store = TableStore(spark, root)
         if registry_backend == "table":
-            from .registry_table import TableStreamRegistry
-
             self.registry = TableStreamRegistry(spark, root)
         elif registry_backend == "jsonl":
             self.registry = StreamRegistry(root)

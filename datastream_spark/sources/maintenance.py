@@ -27,7 +27,7 @@ from .tables import TableStore
 
 #: Compact a partition when it holds more than this many files.
 COMPACT_FILE_THRESHOLD = 8
-#: Target in-memory partition count after compaction (files written).
+#: Files each partition rewrite (purge or compaction) writes.
 COMPACT_TARGET_FILES = 1
 
 
@@ -72,20 +72,21 @@ def compact_table(store: TableStore, table: str = "datapoints",
         n_files = sum(1 for f in os.listdir(ppath) if f.endswith(".parquet"))
         if n_files <= file_threshold:
             continue
-        df = spark.read.parquet(ppath).coalesce(COMPACT_TARGET_FILES)
-        _swap_partition(df, ppath)
+        _swap_partition(spark.read.parquet(ppath), ppath)
         store.invalidate(table)
         compacted += 1
     return compacted
 
 
 def _swap_partition(df, ppath: str) -> None:
-    """Write df to a staging dir, then atomically replace the partition
-    directory (rename is atomic within a filesystem). The swap bypasses
-    ``TableStore``'s writers, so callers ``invalidate`` the table after
-    it."""
+    """Write df as COMPACT_TARGET_FILES files to a staging dir, then
+    atomically replace the partition directory (rename is atomic within
+    a filesystem). The fixed file target makes every rewrite leave the
+    same files whatever the input split count (and so the core count).
+    The swap bypasses ``TableStore``'s writers, so callers
+    ``invalidate`` the table after it."""
     staging = ppath + "._staging"
-    df.write.mode("overwrite").parquet(staging)
+    df.coalesce(COMPACT_TARGET_FILES).write.mode("overwrite").parquet(staging)
     old = ppath + "._old"
     os.rename(ppath, old)
     os.rename(staging, ppath)

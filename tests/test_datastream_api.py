@@ -12,6 +12,9 @@ from datastream_spark.datastream import Datastream
 from datastream_spark.granularity import Granularity
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+#: every ``Datastream(registry_backend=...)``; tests that loop over it
+#: check the find-or-create API on each registry class
+REGISTRY_BACKENDS = ("jsonl", "table")
 
 
 @pytest.fixture()
@@ -23,19 +26,31 @@ def _mk_stream(ds, name="s1", **kw):
     return ds.ensure_stream({"name": name}, **kw)
 
 
-def test_ensure_find_tags(ds):
-    sid = ds.ensure_stream(
-        {"name": "cpu", "node": {"id": "n1"}}, tags={"unit": "pct"}
-    )
-    sid2 = ds.ensure_stream({"name": "cpu", "node": {"id": "n1"}})
-    assert sid == sid2  # find-or-create
-    assert ds.find_streams({"node.id": "n1"})[0]["stream_id"] == sid
-    assert ds.find_streams({"name": "nope"}) == []
-    with pytest.raises(exc.InconsistentStreamConfiguration):
-        ds.ensure_stream(
-            {"name": "cpu", "node": {"id": "n1"}},
-            highest_granularity=Granularity.Minutes,
+def test_ensure_find_tags(spark, tmp_path):
+    for backend in REGISTRY_BACKENDS:
+        root = str(tmp_path / backend)
+        ds = Datastream(spark, root, registry_backend=backend)
+        sid = ds.ensure_stream(
+            {"name": "cpu", "node": {"id": "n1"}}, tags={"unit": "pct"}
         )
+        sid2 = ds.ensure_stream({"name": "cpu", "node": {"id": "n1"}})
+        assert sid == sid2  # find-or-create
+        assert ds.find_streams({"node.id": "n1"})[0]["stream_id"] == sid
+        assert ds.find_streams({"name": "nope"}) == []
+        with pytest.raises(exc.InconsistentStreamConfiguration):
+            ds.ensure_stream(
+                {"name": "cpu", "node": {"id": "n1"}},
+                highest_granularity=Granularity.Minutes,
+            )
+        # tag values keep their type: int 3 and string "3" are two
+        # streams, each found only by its own type, also after a reopen
+        by_type = {v: ds.ensure_stream({"port": v}) for v in (3, "3")}
+        assert by_type[3] != by_type["3"]
+        reopened = Datastream(spark, root, registry_backend=backend)
+        for v, port_sid in by_type.items():
+            for handle in (ds, reopened):
+                found = handle.find_streams({"port": v})
+                assert [s["stream_id"] for s in found] == [port_sid], backend
 
 
 def test_append_get_data_roundtrip(ds):
@@ -323,23 +338,25 @@ def test_counter_ops(ds):
     assert got == [1.0, 8.5, 1.0]
 
 
-def test_granularity_compat_and_delete_deps(ds):
-    coarse = ds.ensure_stream(
-        {"name": "coarse"}, highest_granularity=Granularity.Minutes
-    )
-    with pytest.raises(exc.IncompatibleGranularities):
-        ds.ensure_stream(
-            {"name": "bad"}, derive_from=[coarse], derive_op="derivative",
-            highest_granularity=Granularity.Seconds,
+def test_granularity_compat_and_delete_deps(spark, tmp_path):
+    for backend in REGISTRY_BACKENDS:
+        ds = Datastream(spark, str(tmp_path / backend), registry_backend=backend)
+        coarse = ds.ensure_stream(
+            {"name": "coarse"}, highest_granularity=Granularity.Minutes
         )
-    d = ds.ensure_stream(
-        {"name": "ok"}, derive_from=[coarse], derive_op="derivative",
-        highest_granularity=Granularity.Minutes,
-    )
-    with pytest.raises(exc.OutstandingDependenciesError):
-        ds.delete_streams({"name": "coarse"})
-    assert ds.delete_streams({"name": "ok"}) == 1
-    assert ds.delete_streams({"name": "coarse"}) == 1
+        with pytest.raises(exc.IncompatibleGranularities):
+            ds.ensure_stream(
+                {"name": "bad"}, derive_from=[coarse], derive_op="derivative",
+                highest_granularity=Granularity.Seconds,
+            )
+        ds.ensure_stream(
+            {"name": "ok"}, derive_from=[coarse], derive_op="derivative",
+            highest_granularity=Granularity.Minutes,
+        )
+        with pytest.raises(exc.OutstandingDependenciesError):
+            ds.delete_streams({"name": "coarse"})
+        assert ds.delete_streams({"name": "ok"}) == 1
+        assert ds.delete_streams({"name": "coarse"}) == 1
 
 
 def test_nominal_value_type(ds):

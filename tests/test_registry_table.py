@@ -1,139 +1,10 @@
-"""ScalableStreamRegistry: set-oriented find-or-create, snapshot
-isolation, OCC retry convergence, and tag-subset finds as Catalyst
-filters — the millions-of-streams registry path (SCALE.md §1)."""
+"""TableStreamRegistry: the manifest-table delta-log registry behind
+``Datastream(..., registry_backend="table")`` — the millions-of-streams
+path (SCALE.md §1): O(dirty) saves, lazy hydration pinned to one
+snapshot, OCC contention and log compaction."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from datastream_spark.registry_table import (
-    ScalableStreamRegistry,
-    specs_frame,
-    tag_signature,
-)
-
-
-def _specs(n, src="sensor"):
-    return [
-        {
-            "tags": {"source": src, "node": f"n{i}", "meta": {"dc": f"dc{i % 3}"}},
-            "highest_granularity": "seconds",
-        }
-        for i in range(n)
-    ]
-
-
-def test_ensure_bulk_idempotent_and_incremental(spark, tmp_path):
-    reg = ScalableStreamRegistry(spark, str(tmp_path / "reg"))
-    assert reg.count() == 0
-
-    created = reg.ensure_bulk(specs_frame(spark, _specs(100)))
-    assert created == 100 and reg.count() == 100
-
-    # re-ensure: all specs exist -> zero created, zero new commits
-    v = reg.table.current_version()
-    assert reg.ensure_bulk(specs_frame(spark, _specs(100))) == 0
-    assert reg.table.current_version() == v and reg.count() == 100
-
-    # overlapping batch: only the 50 new specs are created
-    assert reg.ensure_bulk(specs_frame(spark, _specs(150))) == 50
-    assert reg.count() == 150
-
-    # stream_ids are stable across re-ensures (find-or-create, not
-    # create): the id assigned first is the id returned forever
-    sig = tag_signature({"source": "sensor", "node": "n7", "meta": {"dc": "dc1"}})
-    ids = {
-        r.stream_id
-        for r in reg.frame().where(F.col("tag_sig") == sig).collect()
-    }
-    assert len(ids) == 1
-
-
-def test_find_is_subset_match_over_flattened_tags(spark, tmp_path):
-    reg = ScalableStreamRegistry(spark, str(tmp_path / "reg"))
-    reg.ensure_bulk(specs_frame(spark, _specs(30)))
-
-    assert reg.find({"source": "sensor"}).count() == 30
-    assert reg.find({"meta": {"dc": "dc0"}}).count() == 10
-    assert reg.find({"node": "n3", "meta": {"dc": "dc0"}}).count() == 1
-    assert reg.find({"node": "nope"}).count() == 0
-    # value types survive the JSON encoding: int 3 != string "3"
-    reg.ensure_bulk(
-        specs_frame(spark, [{"tags": {"port": 3}}, {"tags": {"port": "3"}}])
-    )
-    assert reg.find({"port": 3}).count() == 1
-    assert reg.find({"port": "3"}).count() == 1
-
-
-def test_concurrent_ensure_converges_without_duplicates(spark, tmp_path):
-    """Two writers racing the same spec batch: OCC makes one commit
-    lose and retry; the re-run anti-join must absorb the winner's rows
-    so the registry ends with ONE stream per spec."""
-    root = str(tmp_path / "reg")
-    a = ScalableStreamRegistry(spark, root)
-    b = ScalableStreamRegistry(spark, root)
-
-    # interleave: a reads snapshot, b commits first, a's commit
-    # conflicts and retries. Simulate by committing b mid-way using
-    # the retry loop's own semantics: ensure via b, then ensure the
-    # SAME batch via a — a's anti-join sees b's rows and creates 0.
-    nb = b.ensure_bulk(specs_frame(spark, _specs(40)))
-    na = a.ensure_bulk(specs_frame(spark, _specs(40)))
-    assert nb == 40 and na == 0
-    assert a.count() == 40
-    sigs = [r.tag_sig for r in a.frame().select("tag_sig").collect()]
-    assert len(sigs) == len(set(sigs)) == 40
-
-    # true commit race on DIFFERENT specs: force a stale base by
-    # pre-reading, then have the other writer commit
-    from datastream_spark.sources.manifest import CommitConflict
-
-    base = a.table.current_version()
-    files = a.table._write_files(
-        a.table.spark.createDataFrame([], a.frame().schema)
-    )
-    b.ensure_bulk(specs_frame(spark, _specs(5, src="other")))
-    with pytest.raises(CommitConflict):
-        a.table._commit(a.table.current_files() + files, base)
-    # the public path retries internally and lands cleanly
-    assert a.ensure_bulk(specs_frame(spark, _specs(10, src="third"))) == 10
-    assert a.count() == 55
-
-
-def test_touch_latest_merges_monotonically(spark, tmp_path):
-    reg = ScalableStreamRegistry(spark, str(tmp_path / "reg"))
-    reg.ensure_bulk(specs_frame(spark, _specs(10)))
-    ids = [r.stream_id for r in reg.frame().select("stream_id").collect()]
-
-    up1 = spark.createDataFrame(
-        [(i, 1000, 100) for i in ids],
-        "stream_id string, latest_us long, earliest_us long",
-    )
-    reg.touch_latest(up1)
-    # regressions are ignored (greatest/least merge), advances land
-    up2 = spark.createDataFrame(
-        [(ids[0], 500, 500), (ids[1], 2000, 50)],
-        "stream_id string, latest_us long, earliest_us long",
-    )
-    reg.touch_latest(up2)
-    rows = {r.stream_id: r for r in reg.frame().collect()}
-    assert rows[ids[0]].latest_us == 1000 and rows[ids[0]].earliest_us == 100
-    assert rows[ids[1]].latest_us == 2000 and rows[ids[1]].earliest_us == 50
-    assert rows[ids[2]].latest_us == 1000
-
-
-def test_append_validation_frame_shape(spark, tmp_path):
-    reg = ScalableStreamRegistry(spark, str(tmp_path / "reg"))
-    reg.ensure_bulk(
-        specs_frame(
-            spark,
-            [{"tags": {"a": 1}}, {"tags": {"a": 2}, "derive_op": "sum"}],
-        )
-    )
-    rows = {
-        r.is_derived
-        for r in reg.append_validation_frame().collect()
-    }
-    assert rows == {True, False}
 
 
 def test_datastream_api_on_table_registry(spark, tmp_path):
@@ -210,7 +81,7 @@ def test_table_registry_save_contention(spark, tmp_path):
     StreamAppendContended after the other writer commits, and reload
     converges."""
     from datastream_spark.exceptions import StreamAppendContended
-    from datastream_spark.registry_table import TableStreamRegistry
+    from datastream_spark.registry import TableStreamRegistry
 
     root = str(tmp_path / "store")
     r1 = TableStreamRegistry(spark, root)
@@ -240,7 +111,7 @@ def test_table_registry_lazy_cold_load(spark, tmp_path):
     dead through a later full hydration, and find()/all() hydrate on
     demand without clobbering local mutations."""
     from datastream_spark.exceptions import StreamNotFound
-    from datastream_spark.registry_table import TableStreamRegistry
+    from datastream_spark.registry import TableStreamRegistry
 
     root = str(tmp_path / "store")
     r1 = TableStreamRegistry(spark, root)
@@ -271,11 +142,27 @@ def test_table_registry_lazy_cold_load(spark, tmp_path):
     assert {d.tags["n"] for d in r3.all()} == {"s0", "s1", "s2", "s4", "s5"}
 
 
+def test_cold_delete_cleans_unhydrated_sources(spark, tmp_path):
+    """delete() on a fresh handle hydrates the doomed streams' sources
+    before the shared cleanup, so a source's contributes_to loses the
+    deleted stream and the source itself can be deleted next."""
+    from datastream_spark.registry import TableStreamRegistry
+
+    root = str(tmp_path / "store")
+    r = TableStreamRegistry(spark, root)
+    src = r.ensure({"n": "src"}, None, ["count"], "seconds")
+    der = r.ensure({"n": "der"}, None, ["count"], "seconds",
+                   derived_from=[src.stream_id], derive_op="sum")
+    TableStreamRegistry(spark, root).delete([der.stream_id])
+    TableStreamRegistry(spark, root).delete([src.stream_id])
+    assert list(TableStreamRegistry(spark, root).all()) == []
+
+
 def test_table_registry_auto_compacts_past_threshold(spark, tmp_path):
     """save() folds the delta log itself once the live file count
     passes AUTO_COMPACT_FILES, so K saves + reload stays O(snapshot)
     read cost — tombstones folded, nothing lost, no manual compact."""
-    from datastream_spark.registry_table import TableStreamRegistry
+    from datastream_spark.registry import TableStreamRegistry
 
     root = str(tmp_path / "store")
     r = TableStreamRegistry(spark, root)
@@ -301,7 +188,7 @@ def test_compact_never_folds_away_a_racing_commit(spark, tmp_path):
     conditionally: a racer's save landing in between surfaces as a
     conflict and the retry folds the RACER'S state too — committed
     rows are never silently erased by the fold."""
-    from datastream_spark.registry_table import TableStreamRegistry
+    from datastream_spark.registry import TableStreamRegistry
 
     root = str(tmp_path / "store")
     a = TableStreamRegistry(spark, root)
@@ -336,7 +223,7 @@ def test_lazy_hydration_is_single_snapshot(spark, tmp_path):
     version: a racer's later commit is invisible until load()/save()
     advances the pin — no mixed-version descriptor views."""
     from datastream_spark.exceptions import StreamNotFound
-    from datastream_spark.registry_table import TableStreamRegistry
+    from datastream_spark.registry import TableStreamRegistry
 
     root = str(tmp_path / "store")
     w = TableStreamRegistry(spark, root)

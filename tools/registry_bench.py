@@ -1,143 +1,47 @@
-"""Registry scale micro-bench: 1M streams (SCALE.md §1 numbers).
+"""Registry scale micro-bench for ``TableStreamRegistry`` (SCALE.md §1, §9).
 
-Measures, on local[32]:
-- ensure_bulk of 1M specs (set-oriented find-or-create, one commit)
-- idempotent re-ensure of the same 1M (anti-join finds nothing new)
-- find-by-tag-subset over the 1M-row registry
-- an append-validation broadcast join: 10M fact rows joined against
-  the 1M-row registry frame (the ``append_dataframe`` hot path)
-- the JSON-lines registry's whole-file rewrite at the same
-  cardinality, for contrast (its save() cost is per-mutation).
+Default (``--dirty``, n = 1M descriptors), on the delta log:
+- the seeding save of n descriptors (one log commit);
+- a save with 10 dirty descriptors (O(dirty), not O(n));
+- a reload (no hydration at load);
+- a fresh handle's time to first append: point get + mutated save;
+- full hydration through ``all()`` (Arrow-batched).
 
-Usage: python tools/registry_bench.py [n_streams]
+``--churn`` (n = 10M): K dirty-save cycles against the log, then save
+cost, point-get latency, live-file count, bytes on disk and read
+amplification before and after compaction (see ``bench_churn``).
+
+Usage: python tools/registry_bench.py [--dirty | --churn] [n_streams]
 Prints one JSON line.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from datastream_spark.session import get_spark  # noqa: E402
-from datastream_spark.registry_table import (  # noqa: E402
-    REGISTRY_SCHEMA,
-    ScalableStreamRegistry,
+from datastream_spark.registry import (  # noqa: E402
+    StreamDescriptor,
+    TableStreamRegistry,
 )
-
-
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    spark = get_spark("registry-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="regbench-")
-    out: dict[str, float] = {}
-
-    # Build the spec frame DISTRIBUTED (1M specs through the driver
-    # would itself be the bottleneck being measured):
-    import pyspark.sql.types as T
-
-    spec_schema = T.StructType(
-        [f for f in REGISTRY_SCHEMA.fields if f.name != "stream_id"]
-    )
-    ids = spark.range(n).select(F.col("id"))
-    specs = ids.select(
-        F.concat(F.lit('{"node": "\\"n'), F.col("id"), F.lit('\\""}')).alias(
-            "tag_sig"
-        ),
-        F.map_from_arrays(
-            F.array(F.lit("node"), F.lit("dc")),
-            F.array(
-                F.concat(F.lit('"n'), F.col("id"), F.lit('"')),
-                F.concat(F.lit('"dc'), (F.col("id") % 3), F.lit('"')),
-            ),
-        ).alias("tags"),
-        F.array(F.lit("count"), F.lit("sum")).alias("value_downsamplers"),
-        F.lit("seconds").alias("highest_granularity"),
-        F.lit("numeric").alias("value_type"),
-        F.lit(None).cast("string").alias("derive_op"),
-        F.lit(None).cast("array<string>").alias("derived_from"),
-        F.lit(None).cast("long").alias("earliest_us"),
-        F.lit(None).cast("long").alias("latest_us"),
-    )
-    assert [f.name for f in spec_schema.fields] == specs.columns
-
-    reg = ScalableStreamRegistry(spark, root)
-
-    t = time.time()
-    created = reg.ensure_bulk(specs)
-    out["ensure_bulk_1m_sec"] = round(time.time() - t, 2)
-    assert created == n, created
-
-    t = time.time()
-    again = reg.ensure_bulk(specs)
-    out["reensure_noop_sec"] = round(time.time() - t, 2)
-    assert again == 0
-
-    t = time.time()
-    hits = reg.find({"dc": "dc1"}).count()
-    out["find_subset_sec"] = round(time.time() - t, 2)
-    assert hits == (n + 1) // 3 or abs(hits - n / 3) < 2
-
-    # append-validation join: 10M fact rows vs the registry frame
-    facts = spark.range(10 * n).select(
-        F.concat(F.lit('"n'), (F.col("id") % n), F.lit('"')).alias("node_key")
-    )
-    vf = reg.frame().select(
-        F.col("tags")["node"].alias("node_key"), "stream_id", "latest_us"
-    )
-    t = time.time()
-    joined = facts.join(F.broadcast(vf), "node_key").where(
-        F.col("stream_id").isNotNull()
-    )
-    cnt = joined.count()
-    out["validation_join_10m_sec"] = round(time.time() - t, 2)
-    assert cnt == 10 * n
-
-    # contrast: JSON-lines registry save() at the same cardinality
-    from datastream_spark.registry import StreamDescriptor, StreamRegistry
-
-    jroot = tempfile.mkdtemp(prefix="regbench-json-")
-    jr = StreamRegistry(jroot)
-    for i in range(n):
-        d = StreamDescriptor(
-            stream_id=f"s{i}",
-            tags={"node": f"n{i}"},
-            value_downsamplers=["count"],
-            highest_granularity="seconds",
-        )
-        jr._streams[d.stream_id] = d
-    t = time.time()
-    jr.save()
-    out["jsonl_full_rewrite_sec"] = round(time.time() - t, 2)
-
-    out["n_streams"] = n
-    print(json.dumps(out))
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(jroot, ignore_errors=True)
+from datastream_spark.session import get_spark  # noqa: E402
 
 
 def bench_table_registry_dirty_save(n: int = 1_000_000) -> None:
     """O(dirty) evidence: save() cost with 10 dirty descriptors out of
-    n, on the TableStreamRegistry delta log vs the JSON full rewrite."""
-    import json as _json
-    import shutil as _sh
-    import tempfile as _tf
-    import time as _time
-
-    from datastream_spark.registry import StreamDescriptor
-    from datastream_spark.registry_table import TableStreamRegistry
-    from datastream_spark.session import get_spark
-
+    n on the TableStreamRegistry delta log, plus reload, first-append
+    and full-hydration cost."""
     spark = get_spark("registry-bench-dirty")
     spark.sparkContext.setLogLevel("ERROR")
-    root = _tf.mkdtemp(prefix="regbench-table-")
+    root = tempfile.mkdtemp(prefix="regbench-table-")
     reg = TableStreamRegistry(spark, root)
     # seed n descriptors via ONE log commit (bypassing per-stream
     # ensure; this bench measures save, not create)
@@ -149,37 +53,37 @@ def bench_table_registry_dirty_save(n: int = 1_000_000) -> None:
             highest_granularity="seconds",
         )
         reg._streams[d.stream_id] = d
-    t = _time.time()
+    t = time.time()
     reg.save()
-    seed_s = round(_time.time() - t, 2)
+    seed_s = round(time.time() - t, 2)
 
     for i in range(10):
         reg._streams[f"s{i}"].latest_us = 42
-    t = _time.time()
+    t = time.time()
     reg.save()
-    dirty_s = round(_time.time() - t, 2)
+    dirty_s = round(time.time() - t, 2)
 
-    t = _time.time()
+    t = time.time()
     reg.load()
-    load_s = round(_time.time() - t, 2)  # O(1): no hydration at load
+    load_s = round(time.time() - t, 2)  # O(1): no hydration at load
 
     # the VERDICT-r4 gate: fresh handle -> point get -> mutated save,
     # i.e. the registry cost on the first append of a new driver
     fresh = TableStreamRegistry(spark, root)
-    t = _time.time()
+    t = time.time()
     d = fresh.get(f"s{n // 2}")
     d.latest_us = 99
     fresh.save()
-    ttfa_s = round(_time.time() - t, 2)
+    ttfa_s = round(time.time() - t, 2)
 
     # full hydration (find/all path), Arrow-batched
     fresh2 = TableStreamRegistry(spark, root)
-    t = _time.time()
+    t = time.time()
     n_all = len(list(fresh2.all()))
-    hydrate_s = round(_time.time() - t, 2)
+    hydrate_s = round(time.time() - t, 2)
     assert n_all == n
 
-    print(_json.dumps({
+    print(json.dumps({
         "table_registry_seed_1m_sec": seed_s,
         "table_registry_dirty10_save_sec": dirty_s,
         "table_registry_reload_sec": load_s,
@@ -187,7 +91,7 @@ def bench_table_registry_dirty_save(n: int = 1_000_000) -> None:
         "hydrate_all_sec": hydrate_s,
         "n_streams": n,
     }))
-    _sh.rmtree(root, ignore_errors=True)
+    shutil.rmtree(root, ignore_errors=True)
 
 
 def bench_churn(
@@ -207,19 +111,9 @@ def bench_churn(
     handle then exercises the real lazy-hydration path: point get ->
     mutate -> O(dirty) save.
     """
-    import json as _json
-    import os as _os
-    import shutil as _sh
-    import tempfile as _tf
-    import time as _time
-
-    from datastream_spark.registry import StreamDescriptor
-    from datastream_spark.registry_table import TableStreamRegistry
-    from datastream_spark.session import get_spark
-
     spark = get_spark("registry-churn")
     spark.sparkContext.setLogLevel("ERROR")
-    root = _tf.mkdtemp(prefix="regchurn-")
+    root = tempfile.mkdtemp(prefix="regchurn-")
     out: dict = {"n_streams": n, "cycles": cycles,
                  "dirty_per_cycle": dirty_per_cycle}
 
@@ -248,9 +142,9 @@ def bench_churn(
     out["seed_files"] = len(reg.table.current_files())
 
     def _point_get_sec(handle, sid):
-        t0 = _time.time()
+        t0 = time.time()
         handle.get(sid)
-        return round(_time.time() - t0, 3)
+        return round(time.time() - t0, 3)
 
     out["point_get_cold_sec"] = _point_get_sec(reg, f"s{n // 2}")
 
@@ -261,9 +155,9 @@ def bench_churn(
             sid = f"s{(k * dirty_per_cycle + j) * (n // (cycles * dirty_per_cycle + 1))}"
             d = reg.get(sid)
             d.latest_us = k * 1000 + j
-        t0 = _time.time()
+        t0 = time.time()
         reg.save()
-        save_secs.append(round(_time.time() - t0, 2))
+        save_secs.append(round(time.time() - t0, 2))
         nf = len(reg.table.current_files())
         if nf < prev_files:
             compactions += 1
@@ -278,9 +172,9 @@ def bench_churn(
 
     def _du(path):
         tot = 0
-        for dirpath, _dirs, files in _os.walk(path):
+        for dirpath, _dirs, files in os.walk(path):
             for f in files:
-                tot += _os.path.getsize(_os.path.join(dirpath, f))
+                tot += os.path.getsize(os.path.join(dirpath, f))
         return tot
 
     out["log_bytes_after_churn"] = _du(root)
@@ -306,8 +200,8 @@ def bench_churn(
     out["bytes_after_compact"] = _du(root)
     reg.load()
     out["point_get_post_compact_sec"] = _point_get_sec(reg, f"s{2 * n // 3}")
-    print(_json.dumps(out))
-    _sh.rmtree(root, ignore_errors=True)
+    print(json.dumps(out))
+    shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":
@@ -315,9 +209,7 @@ if __name__ == "__main__":
         bench_churn(
             int(sys.argv[-1]) if sys.argv[-1].isdigit() else 10_000_000
         )
-    elif "--dirty" in sys.argv:
+    else:
         bench_table_registry_dirty_save(
             int(sys.argv[-1]) if sys.argv[-1].isdigit() else 1_000_000
         )
-    else:
-        main()
