@@ -433,9 +433,9 @@ def test_propagate_skips_unaffected_parent(ds, spark):
     recomputed = []
     orig = Datastream._recompute_derived
 
-    def spy(self, descs, *args, **kw):
-        recomputed.extend(d.stream_id for d in descs)
-        return orig(self, descs, *args, **kw)
+    def spy(self, groups, *args, **kw):
+        recomputed.extend(d.stream_id for descs in groups for d in descs)
+        return orig(self, groups, *args, **kw)
 
     Datastream._recompute_derived = spy
     try:
@@ -882,10 +882,11 @@ def test_normalize_ntz_recurses_into_nested_types(spark):
 
 
 def test_propagation_groups_same_op_streams_into_one_job(ds, monkeypatch):
-    """N same-op derived streams recompute as ONE set-oriented job per
-    (op, granularity, boundary) group — the write (one dynamic
-    overwrite per group) is the job count's proxy. Values must be
-    identical to the per-stream path."""
+    """N same-op derived streams recompute as ONE set-oriented group per
+    (op, granularity), and every group of a depth level sharing a
+    recompute boundary lands in ONE dynamic overwrite — the write count
+    is the job count's proxy. Values must be identical to the
+    per-stream path."""
     n = 6
     srcs = [_mk_stream(ds, name=f"src{i}") for i in range(n)]
     ds.append_multiple(
@@ -919,16 +920,17 @@ def test_propagation_groups_same_op_streams_into_one_job(ds, monkeypatch):
 
     monkeypatch.setattr(ds.store, "overwrite_derived", counting)
 
-    # one append touching every source -> 12 affected derived streams,
-    # but only TWO grouped recompute jobs (sum group + derivative group)
+    # one append touching every source -> 12 affected derived streams
+    # in two groups (sum, derivative) at one depth and one boundary:
+    # ONE fused write
     ds.append_multiple(
         [
             {"stream_id": s, "value": 100.0 + i, "timestamp": T0 + dt.timedelta(seconds=5)}
             for i, s in enumerate(srcs)
         ]
     )
-    assert len(writes) == 2, writes
-    assert sorted(map(len, writes)) == [n, n]
+    assert len(writes) == 1, writes
+    assert sorted(map(len, writes)) == [2 * n]
 
     # grouped outputs match the per-stream semantics exactly
     for i in range(n):
@@ -1028,9 +1030,9 @@ def test_grouped_sum_counts_a_repeated_source_once(ds):
 
 
 def test_backprocess_groups_same_op_streams_into_one_job(ds, monkeypatch):
-    """backprocess_streams recomputes same-op streams as ONE job per
-    (op, granularity) group, with the values a per-stream recompute
-    gives."""
+    """backprocess_streams recomputes same-op streams as ONE group per
+    (op, granularity), and all groups of one depth in ONE write, with
+    the values a per-stream recompute gives."""
     n = 3
     srcs = [_mk_stream(ds, name=f"src{i}") for i in range(n)]
     ds.append_multiple(
@@ -1058,8 +1060,8 @@ def test_backprocess_groups_same_op_streams_into_one_job(ds, monkeypatch):
 
     monkeypatch.setattr(ds.store, "overwrite_derived", counting)
     ds.backprocess_streams()
-    assert len(writes) == 2, writes
-    assert sorted(map(len, writes)) == [n, n]
+    assert len(writes) == 1, writes
+    assert sorted(map(len, writes)) == [2 * n]
     grouped = {
         sid: [(p["t"], p["v"]) for p in ds.get_data(sid, Granularity.Seconds)]
         for sid in derived
@@ -1072,7 +1074,7 @@ def test_backprocess_groups_same_op_streams_into_one_job(ds, monkeypatch):
         ds.backprocess_streams([sid])
         got = [(p["t"], p["v"]) for p in ds.get_data(sid, Granularity.Seconds)]
         assert got == grouped[sid], sid
-    assert len(writes) == 2 + 2 * n
+    assert len(writes) == 1 + 2 * n
 
 
 def test_get_data_fill_surface(ds):

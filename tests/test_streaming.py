@@ -1810,7 +1810,10 @@ def test_lsh_sink_restart_parity_at_scale(spark, tmp_path):
     from datastream_spark.sources.manifest import ManifestedTable
     from datastream_spark.streaming.sink import lsh_streaming_sink
 
-    src = "/root/repo/scaledata/sf1/documents.parquet"
+    src = _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+        "scaledata", "sf1", "documents.parquet",
+    )
     if not _os.path.exists(src):
         pytest.skip("scaledata sf1 not generated on this machine")
     geo = dict(num_hashes=32, rows_per_band=16, shingle_k=3)
@@ -1888,7 +1891,10 @@ def test_simhash_sink_restart_parity_at_scale(spark, tmp_path):
     from datastream_spark.sources.manifest import ManifestedTable
     from datastream_spark.streaming.sink import simhash_streaming_sink
 
-    src = "/root/repo/scaledata/sf1/documents.parquet"
+    src = _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+        "scaledata", "sf1", "documents.parquet",
+    )
     if not _os.path.exists(src):
         pytest.skip("scaledata sf1 not generated on this machine")
     geo = dict(bits=60, bands=4, max_hamming=3)

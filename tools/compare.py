@@ -14,7 +14,7 @@ import os
 import sys
 import datetime as dt
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Override to hash-check at another scale (e.g. the sf1 generator-twin
 # data: COMPARE_SF_DIR=/root/repo/scaledata/sf1) — same gate, more rows.

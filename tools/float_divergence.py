@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("COMPARE_SF_DIR", "/root/repo/scaledata/sf1")
 TABLES = [

@@ -12,9 +12,10 @@ Usage: python tools/strictdiff.py q_w2_derivative [probe ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
