@@ -271,17 +271,19 @@ class Datastream:
         return len(doomed)
 
     def vacuum(self) -> dict:
-        """Maintenance: physically purge deleted streams' rows and
-        compact fragmented date partitions (sources/maintenance.py).
+        """Maintenance: physically purge deleted streams' raw rows and
+        compact fragmented date partitions, with one aggregate and one
+        partition overwrite through the store (sources/maintenance.py).
         Reads are correct without it (registry-first filtering); this
         reclaims storage and file handles — run it like the reference's
-        cron maintenance worker."""
+        cron maintenance worker. ``partitions_rewritten`` counts date
+        partitions that had dead rows, ``partitions_compacted``
+        over-threshold ones that had none."""
         from .sources import maintenance
 
         self.flush()
         live = [d.stream_id for d in self.registry.all()]
-        purged = maintenance.purge_deleted_streams(self.store, live)
-        compacted = maintenance.compact_table(self.store)
+        purged, compacted = maintenance.vacuum(self.store, live)
         return {"partitions_rewritten": purged, "partitions_compacted": compacted}
 
     def update_tags(self, stream_id: str, tags: dict) -> None:
@@ -850,31 +852,13 @@ class Datastream:
         raw_parts = [p for kind, p in parts if kind == "raw"]
         if rollup_parts and raw_parts:
             # unify: raw rows presented as single-point buckets
-            raw_u = [
-                p.select(
-                    "stream_id",
-                    (F.unix_micros("ts") / 1_000_000).cast("bigint").alias(
-                        "bucket_epoch"
-                    ),
-                    F.lit(1).cast("bigint").alias("v_count"),
-                    F.col("value").alias("v_sum"),
-                    F.col("value").alias("v_min"),
-                    F.col("value").alias("v_max"),
-                    (F.col("value") * F.col("value")).alias("v_sum_squares"),
-                )
-                for p in raw_parts
-            ]
             base = rollup_parts[0].select(
                 "stream_id", "bucket_epoch", "v_count", "v_sum", "v_min",
                 "v_max", "v_sum_squares",
             )
             out = base
-            for p in rollup_parts[1:]:
-                out = out.unionByName(
-                    p.select(*base.columns)
-                )
-            for p in raw_u:
-                out = out.unionByName(p)
+            for p in rollup_parts[1:] + [_points_as_buckets(p) for p in raw_parts]:
+                out = out.unionByName(p.select(*base.columns))
             return out
         if rollup_parts:
             out = rollup_parts[0]
@@ -1346,9 +1330,7 @@ class Datastream:
             out = sliced.groupBy("stream_id", F.col("_b").alias("bucket_epoch")).agg(
                 *rollup_ops.merge_rollup_aggs()
             )
-        out = rollup_ops.finish_columns(out).withColumn(
-            "t_mean", F.col("t_mean")
-        )
+        out = rollup_ops.finish_columns(out)
         # data before watermark, idempotent overwrite — crash-retry
         # rewrites the same partitions instead of appending duplicates
         self.store.overwrite_rollup(out, coarser.name)

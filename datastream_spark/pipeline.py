@@ -56,9 +56,9 @@ class CurationConfig:
     # portable=True swaps the LSH signature family from salted
     # xxhash64 (the zero-shuffle production default) to the salted
     # md5-chunk family a DuckDB oracle can replay (ceil(n/4) digests
-    # per shingle; cost split measured per-scale by
-    # tools/lsh_scale_probe.py --family); only worth it when
-    # cross-engine verification of the whole funnel is the point.
+    # per shingle; cost split measured per-scale in SCALE.md §17);
+    # only worth it when cross-engine verification of the whole
+    # funnel is the point.
     portable: bool = False
     text_col: str = "text"
     id_col: str = "doc_id"

@@ -2,24 +2,23 @@
 
 Parity + operations layer for SURVEY.md §2.1 S6: ``delete_streams`` is
 registry-first (reads filter against the registry, so deletion is
-immediately visible), and this module is the background job that makes
+immediately visible), and ``vacuum`` is the background job that makes
 it physical — the Spark-native analogue of the reference's
 ``Backend.delete_streams`` collection deletes (mongodb.py:~760 [MED])
 plus the compaction every long-lived append-only table needs.
 
-Both operations are per-partition rewrites: read one p_date partition,
-filter/coalesce, write to a staging directory, atomic directory swap.
-At 100 TB you run them partition-by-partition (bounded memory, bounded
-blast radius) and only on partitions that need it — deleted-stream rows
-or file counts above threshold. With a Delta-backed store these become
-``DELETE`` + ``OPTIMIZE``; the parquet implementation keeps the engine
-dependency-free.
+Set-oriented, like the reference's one delete per collection: one
+aggregate over the raw table counts each ``p_date`` partition's dead
+rows, live rows and files, and one dynamic partition overwrite through
+``TableStore`` rewrites the partitions that need it — deleted-stream
+rows, or more than ``COMPACT_FILE_THRESHOLD`` files — without their
+dead rows, one file each. A partition that needs neither is only read
+by the aggregate, so the job count does not grow with history. With a
+Delta-backed store these become ``DELETE`` + ``OPTIMIZE``; the parquet
+implementation keeps the engine dependency-free.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -27,67 +26,31 @@ from .tables import TableStore
 
 #: Compact a partition when it holds more than this many files.
 COMPACT_FILE_THRESHOLD = 8
-#: Files each partition rewrite (purge or compaction) writes.
-COMPACT_TARGET_FILES = 1
 
 
-def _partitions(store: TableStore, table: str) -> list[str]:
-    root = store.path(table)
-    if not os.path.isdir(root):
-        return []
-    return sorted(d for d in os.listdir(root) if d.startswith("p_date="))
-
-
-def purge_deleted_streams(store: TableStore, live_stream_ids: list[str],
-                          table: str = "datapoints") -> int:
-    """Physically drop rows whose stream_id is no longer registered.
-    Returns the number of partitions rewritten. Partitions with no dead
-    rows are left untouched (cheap existence probe before rewrite)."""
-    spark = store.spark
-    live = spark.createDataFrame(
-        [(s,) for s in live_stream_ids], "stream_id string"
+def vacuum(store: TableStore, live_ids: list[str]) -> tuple[int, int]:
+    """Drop the raw rows of every stream not in ``live_ids`` and
+    compact date partitions of more than ``COMPACT_FILE_THRESHOLD``
+    files. Returns (partitions that had dead rows, over-threshold
+    partitions that had none); each rewritten partition ends as one
+    file, and one left without rows is dropped."""
+    raw = store.read("datapoints")
+    if raw is None:
+        return 0, 0
+    is_live = F.col("stream_id").isin(live_ids)
+    todo = (
+        raw.groupBy("p_date")
+        .agg(
+            F.count_if(~is_live).alias("dead"),
+            F.count_if(is_live).alias("live"),
+            F.count_distinct("_metadata.file_path").alias("files"),
+        )
+        .where((F.col("dead") > 0) | (F.col("files") > COMPACT_FILE_THRESHOLD))
+        .collect()
     )
-    rewritten = 0
-    for part in _partitions(store, table):
-        ppath = os.path.join(store.path(table), part)
-        df = spark.read.parquet(ppath)
-        dead = df.join(F.broadcast(live), "stream_id", "left_anti")
-        if dead.isEmpty():
-            continue
-        kept = df.join(F.broadcast(live), "stream_id", "left_semi")
-        _swap_partition(kept, ppath)
-        store.invalidate(table)
-        rewritten += 1
-    return rewritten
-
-
-def compact_table(store: TableStore, table: str = "datapoints",
-                  file_threshold: int = COMPACT_FILE_THRESHOLD) -> int:
-    """Rewrite partitions whose file count exceeds the threshold into
-    COMPACT_TARGET_FILES files. Returns partitions compacted."""
-    spark = store.spark
-    compacted = 0
-    for part in _partitions(store, table):
-        ppath = os.path.join(store.path(table), part)
-        n_files = sum(1 for f in os.listdir(ppath) if f.endswith(".parquet"))
-        if n_files <= file_threshold:
-            continue
-        _swap_partition(spark.read.parquet(ppath), ppath)
-        store.invalidate(table)
-        compacted += 1
-    return compacted
-
-
-def _swap_partition(df, ppath: str) -> None:
-    """Write df as COMPACT_TARGET_FILES files to a staging dir, then
-    atomically replace the partition directory (rename is atomic within
-    a filesystem). The fixed file target makes every rewrite leave the
-    same files whatever the input split count (and so the core count).
-    The swap bypasses ``TableStore``'s writers, so callers
-    ``invalidate`` the table after it."""
-    staging = ppath + "._staging"
-    df.coalesce(COMPACT_TARGET_FILES).write.mode("overwrite").parquet(staging)
-    old = ppath + "._old"
-    os.rename(ppath, old)
-    os.rename(staging, ppath)
-    shutil.rmtree(old)
+    kept = [r.p_date for r in todo if r.live]
+    if kept:
+        store.overwrite_raw(raw.where(F.col("p_date").isin(kept) & is_live))
+    store.drop_raw_partitions([r.p_date for r in todo if not r.live])
+    dirty = sum(1 for r in todo if r.dead)
+    return dirty, len(todo) - dirty

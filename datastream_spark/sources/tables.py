@@ -26,6 +26,7 @@ the resulting DataFrame is reused until the table changes (see
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,9 +86,9 @@ def _version(path: str) -> tuple[int, int | None]:
     """Version marker of a table directory: its mtime, plus that of the
     streaming sink's ``_spark_metadata/`` log when there is one. Every
     Spark batch commit creates and removes ``_temporary`` or
-    ``.spark-staging-*`` in the table directory, and maintenance renames
-    partitions there, so each moves the directory's mtime; the sink
-    commits into its log."""
+    ``.spark-staging-*`` in the table directory, and dropping a
+    partition removes its directory there, so each moves the
+    directory's mtime; the sink commits into its log."""
     meta = os.path.join(path, "_spark_metadata")
     meta_ns = os.stat(meta).st_mtime_ns if os.path.isdir(meta) else None
     return os.stat(path).st_mtime_ns, meta_ns
@@ -100,8 +101,10 @@ class TableStore:
     The DataFrame holds the table's file listing, so it is reused only
     while the table is unchanged:
 
-    - writes through any ``TableStore`` of this process (and the
-      maintenance rewrites) drop the handle exactly, via ``invalidate``;
+    - writes through any ``TableStore`` of this process (maintenance
+      rewrites included: they go through ``overwrite_raw`` and
+      ``drop_raw_partitions``) drop the handle exactly, via
+      ``invalidate``;
     - writes that bypass the store (other processes, a streaming sink)
       are caught by a version marker checked on every read: the table
       directory's ``st_mtime_ns`` (see ``_version``). That needs a filesystem with nanosecond mtimes; on
@@ -157,6 +160,21 @@ class TableStore:
         )
         out.write.mode("append").partitionBy("p_date").parquet(self.path("datapoints"))
         self.invalidate("datapoints")
+
+    def overwrite_raw(self, df: DataFrame) -> None:
+        """Replace exactly the raw ``p_date`` partitions present in
+        ``df`` (rows as ``read("datapoints")`` returns them), one file
+        each — the maintenance rewrite (sources/maintenance.py). A
+        partition left without rows is not present in ``df``, so it
+        stays as it is: ``drop_raw_partitions`` removes those."""
+        self._overwrite_partitions(df, "datapoints", ["p_date"])
+
+    def drop_raw_partitions(self, dates: list) -> None:
+        """Delete the raw ``p_date`` partitions ``dates``."""
+        for d in dates:
+            shutil.rmtree(os.path.join(self.path("datapoints"), f"p_date={d}"))
+        if dates:
+            self.invalidate("datapoints")
 
     def overwrite_derived(self, df: DataFrame, stream_ids: list[str]) -> None:
         """Idempotent recompute: dynamic partition overwrite replaces
@@ -252,13 +270,24 @@ class TableStore:
         file per partition dir, which is also what keeps the
         downstream ladder scans from dying of file-listing overhead at
         scale."""
-        table = f"rollup_{granularity_name}"
+        self._overwrite_partitions(
+            self._rollup_partitioned(df),
+            f"rollup_{granularity_name}",
+            ["p_date", "stream_id"],
+        )
+
+    def _overwrite_partitions(
+        self, df: DataFrame, table: str, cols: list[str]
+    ) -> None:
+        """Dynamic partition overwrite of exactly the ``cols``
+        partitions present in ``df``, repartitioned on ``cols`` first so
+        each written partition is one file whatever the input split
+        count (and so the core count)."""
         (
-            self._rollup_partitioned(df)
-            .repartition("p_date", "stream_id")
+            df.repartition(*cols)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("p_date", "stream_id")
+            .partitionBy(*cols)
             .parquet(self.path(table))
         )
         self.invalidate(table)

@@ -165,7 +165,7 @@ def kmv_foreach_batch_sink(
     Use: ``stream.writeStream.foreachBatch(
     kmv_foreach_batch_sink(table, "user_id", F.col("page"),
     portable=False)).start()``. Parity with the batch build is pinned
-    by test; throughput measured in tools/streaming_bench.py.
+    by test; throughput measured in SCALE.md §13b.
     """
     from ..operators.kmv import kmv_merge, kmv_sketch
 

@@ -1303,6 +1303,33 @@ def test_forecast_mixed_raw_and_rollup_buckets_correctly(ds):
     assert rows[b][0] >= 8
 
 
+def test_forecast_mixed_scan_skips_null_values(ds):
+    """In scan()'s mixed raw+rollup frame a NULL raw value is a bucket
+    of count 0, as in every rollup: the raw stream's bucket mean is the
+    mean of its non-null values whether or not a rollup-served stream
+    matches the same tags."""
+    a = _mk_stream(ds, name="nullmix", highest_granularity=Granularity.Minutes)
+    ds.append_multiple(
+        [
+            {"stream_id": a, "value": v, "timestamp": T0 + dt.timedelta(seconds=i)}
+            for i, v in enumerate([1.0, None, 3.0])
+        ]
+    )
+    # rollup-served at Minutes: its Seconds points are read from the ladder
+    b = _mk_stream(ds, name="rolled")
+    ds.append(b, 7.0, T0)
+    ds.downsample_streams(until=T0 + dt.timedelta(minutes=2))
+
+    def level(query_tags):
+        rows = ds.forecast(query_tags, granularity=Granularity.Minutes).collect()
+        return {r.stream_id: r.level for r in rows}
+
+    assert level({"name": "nullmix"}) == {a: 2.0}
+    both = level(None)
+    assert both[a] == 2.0
+    assert both[b] == 7.0
+
+
 def test_validate_api_surface(ds):
     """Expectation suite through the facade over raw datapoints:
     hand-counted violations, bounded window, passed flags."""

@@ -70,6 +70,59 @@ def test_vacuum_purges_and_compacts(spark, tmp_path):
     assert n_files <= 2
 
 
+def test_vacuum_drops_a_day_of_only_deleted_rows(spark, tmp_path):
+    ds = Datastream(spark, str(tmp_path / "store"))
+    keep = ds.ensure_stream({"name": "keep"})
+    drop = ds.ensure_stream({"name": "drop"})
+    ds.append_multiple(
+        [
+            {"stream_id": keep, "value": 1.0, "timestamp": T0},
+            {"stream_id": drop, "value": 2.0, "timestamp": T0},
+            {"stream_id": drop, "value": 3.0, "timestamp": T0 + dt.timedelta(days=1)},
+        ]
+    )
+    ds.delete_streams({"name": "drop"})
+    assert ds.vacuum() == {"partitions_rewritten": 2, "partitions_compacted": 0}
+    table = str(tmp_path / "store" / "datapoints")
+    assert sorted(d for d in os.listdir(table) if d.startswith("p_date=")) == [
+        "p_date=2024-01-01"
+    ]
+    raw = ds.store.read("datapoints")
+    assert [(r.stream_id, r.value) for r in raw.collect()] == [(keep, 1.0)]
+
+
+def test_vacuum_jobs_do_not_grow_with_history(spark, tmp_path):
+    """Vacuum picks its rewrite set with one aggregate and rewrites it
+    with one overwrite: a store of 16 days runs as many Spark jobs as
+    one of 4 days when a single day holds deleted rows."""
+    sc = spark.sparkContext
+
+    def vacuum_jobs(days):
+        ds = Datastream(spark, str(tmp_path / f"store{days}"))
+        keep = ds.ensure_stream({"name": "keep"})
+        drop = ds.ensure_stream({"name": "drop"})
+        ds.append_multiple(
+            [{"stream_id": drop, "value": 0.0, "timestamp": T0}]
+            + [
+                {"stream_id": keep, "value": float(d),
+                 "timestamp": T0 + dt.timedelta(days=d)}
+                for d in range(days)
+            ]
+        )
+        ds.delete_streams({"name": "drop"})
+        group = f"test-vacuum-jobs-{days}"
+        sc.setJobGroup(group, group)
+        try:
+            assert ds.vacuum()["partitions_rewritten"] == 1
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert ds.store.read("datapoints").count() == days
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert vacuum_jobs(4) == vacuum_jobs(16)
+
+
 def test_manifested_table_snapshot_commits(spark, tmp_path):
     """Manifest commits are atomic and snapshot-isolated: uncommitted
     files are invisible, appends/overwrites flip visibility in one

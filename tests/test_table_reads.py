@@ -97,10 +97,9 @@ def test_version_marker_catches_writes_outside_the_store(spark, tmp_path):
 
 
 def test_read_after_vacuum_sees_the_rewritten_partitions(spark, tmp_path, monkeypatch):
-    """Maintenance swaps partition directories behind the store; it
-    invalidates the cached handles itself (the version marker is pinned
-    here), so a read after vacuum neither hits a deleted file nor
-    misses a rewritten one."""
+    """Vacuum rewrites partitions through the store, which drops the
+    cached handles (the version marker is pinned here), so a read after
+    vacuum neither hits a deleted file nor misses a rewritten one."""
     monkeypatch.setattr(tables, "_version", lambda path: (0, None))
     ds = Datastream(spark, str(tmp_path / "store"))
     keep = ds.ensure_stream({"name": "keep"})
@@ -121,10 +120,14 @@ def test_read_after_vacuum_sees_the_rewritten_partitions(spark, tmp_path, monkey
     assert [p["v"] for p in ds.get_data(keep, Granularity.Seconds)] == [
         float(i) for i in range(10)
     ]
-    # compaction swaps the partition again, whatever vacuum's split count
-    assert maintenance.compact_table(ds.store, file_threshold=0) == 1
+    # more small appends to the same day pass the file threshold, and
+    # compaction rewrites the day again, whatever vacuum's split count
+    for i in range(10, 10 + maintenance.COMPACT_FILE_THRESHOLD + 1):
+        ds.append(keep, float(i), T0 + dt.timedelta(seconds=10 * i))
+        ds.flush()
+    assert ds.vacuum() == {"partitions_rewritten": 0, "partitions_compacted": 1}
     part = os.path.join(ds.store.path("datapoints"), "p_date=2024-01-01")
     assert sum(f.endswith(".parquet") for f in os.listdir(part)) == 1
     assert [p["v"] for p in ds.get_data(keep, Granularity.Seconds)] == [
-        float(i) for i in range(10)
+        float(i) for i in range(10 + maintenance.COMPACT_FILE_THRESHOLD + 1)
     ]
