@@ -76,12 +76,33 @@ def _date_str(epoch_s: int) -> str:
 
 
 class Datapoints:
-    """Lazy result cursor (api.py:~250 Datapoints [HIGH]): supports
-    ``len()``, iteration, slicing — DataFrame laziness underneath, and
-    ``.df`` exposes the Spark-first surface directly.
+    """Lazy result cursor (api.py:~250 Datapoints [HIGH]) over one
+    stream's rows in time order (``reverse`` flips it): ``len()``,
+    iteration, indexing, slicing, and ``.df`` for the Spark-first
+    surface.
 
-    The cursor is per-stream (``get_data`` filters to one stream_id),
-    so slicing numbers rows with ``row_number`` over a
+    The cursor holds the stream's filtered rows unordered; each access
+    orders them in the shape that suits it:
+
+    - ``.df`` is the cursor's result set: every row in ONE partition,
+      sorted within it, so reading it runs no range-partition sampling
+      job. Rollup reads are pruned to the stream's own files, so one
+      task scans and sorts them (one Spark job); raw reads keep the
+      scan of the shared ``p_date`` directories parallel and shuffle
+      only the stream's rows to the sorting task (two jobs). This suits
+      the small windows a cursor serves; ``Datastream.scan`` is the
+      set-oriented, fully parallel read.
+    - iteration runs ``toLocalIterator`` over a range-partitioned
+      ``orderBy``, so the driver holds one range of the result at a
+      time however large the stream is.
+    - ``len()`` counts the unordered rows.
+
+    Iterated and indexed rows decode their timestamps from
+    ``unix_micros`` as naive UTC datetimes, whatever the host's time
+    zone (the same datetimes ``append`` takes); ``.df`` keeps the
+    stored columns and types.
+
+    Slicing numbers rows with ``row_number`` over a
     ``partitionBy(stream_id)`` window ordered by the cursor's time
     column — the user-visible order — rather than a partitionless
     window, which would both drag the whole stream through a single
@@ -92,44 +113,54 @@ class Datapoints:
         self,
         df: DataFrame,
         decode,
+        decode_sql: Iterable[str],
         order_col: str = "ts",
         reverse: bool = False,
+        stream_files: bool = False,
     ):
-        self.df = df
+        self._frame = df
         self._decode = decode
+        self._decode_sql = decode_sql
         self._order_col = order_col
         self._reverse = reverse
+        self._stream_files = stream_files
+
+    @property
+    def df(self) -> DataFrame:
+        """The result set, in one partition sorted in cursor order."""
+        one =self._frame.coalesce(1) if self._stream_files else self._frame.repartition(1)
+        return one.sortWithinPartitions(self._order_col, ascending=not self._reverse)
 
     def __len__(self) -> int:
-        return self.df.count()
+        return self._frame.count()
 
     def __iter__(self) -> Iterator[dict]:
-        for row in self.df.toLocalIterator():
+        ordered = self._frame.orderBy(self._order_col, ascending=not self._reverse)
+        for row in ordered.selectExpr(*self._decode_sql).toLocalIterator():
             yield self._decode(row)
 
     def batch_size(self, n: int) -> "Datapoints":
         return self  # arrow batching is automatic in Spark
 
-    def _ordering(self) -> F.Column:
-        c = F.col(self._order_col)
-        return c.desc() if self._reverse else c.asc()
-
     def __getitem__(self, item):
         if isinstance(item, slice):
             start = item.start or 0
             stop = item.stop
-            w = Window.partitionBy("stream_id").orderBy(self._ordering())
-            numbered = self.df.withColumn("_rn", F.row_number().over(w))
+            c = F.col(self._order_col)
+            w = Window.partitionBy("stream_id").orderBy(c.desc() if self._reverse else c)
+            numbered = self._frame.withColumn("_rn", F.row_number().over(w))
             cond = F.col("_rn") > start
             if stop is not None:
                 cond = cond & (F.col("_rn") <= stop)
             return Datapoints(
                 numbered.where(cond).drop("_rn"),
                 self._decode,
+                self._decode_sql,
                 self._order_col,
                 self._reverse,
+                self._stream_files,
             )
-        rows = self.df.limit(item + 1).collect()
+        rows = self.df.selectExpr(*self._decode_sql).limit(item + 1).collect()
         return self._decode(rows[item])
 
 
@@ -609,16 +640,16 @@ class Datastream:
                 )
             df = self._raw_df()
             if df is None:
-                return Datapoints(self._empty_raw(), _decode_raw(d.value_type))
-            df = df.where(F.col("stream_id") == stream_id)
+                return Datapoints(
+                    self._empty_raw(), _decode_raw(d.value_type), _RAW_DECODE_SQL
+                )
             df = self._apply_bounds(
-                df, "ts", g, start, end, start_exclusive, end_exclusive
+                df, "ts", g, start, end, start_exclusive, end_exclusive, [stream_id]
             )
-            df = df.orderBy(F.col("ts").desc() if reverse else F.col("ts"))
             return Datapoints(
                 df.select("stream_id", "ts", "value", "value_json"),
                 _decode_raw(d.value_type),
-                order_col="ts",
+                _RAW_DECODE_SQL,
                 reverse=reverse,
             )
 
@@ -626,11 +657,12 @@ class Datastream:
         if tbl is None:
             return Datapoints(
                 self._empty_rollup(), _decode_rollup([], []),
-                order_col="bucket_epoch",
+                ("stream_id", "bucket_epoch"), order_col="bucket_epoch",
+                stream_files=True,
             )
-        df = tbl.where(F.col("stream_id") == stream_id)
         df = self._apply_bounds(
-            df, "bucket_epoch", g, start, end, start_exclusive, end_exclusive
+            tbl, "bucket_epoch", g, start, end, start_exclusive, end_exclusive,
+            [stream_id],
         )
         vds = value_downsamplers or d.value_downsamplers
         tds = time_downsamplers or ["first", "last", "mean"]
@@ -674,14 +706,19 @@ class Datastream:
                 passthrough=tcols,
             )
             cols = cols + ["filled"]
-        df = df.orderBy(
-            F.col("bucket_epoch").desc() if reverse else F.col("bucket_epoch")
-        )
+        # time downsamplers decode from epoch µs (see Datapoints)
+        decode_sql = [
+            f"unix_micros({c}) AS {c}" if c in _TIME_COLS else c for c in cols
+        ]
         return Datapoints(
             df.select(*cols),
             _decode_rollup(vds, tds, filled_flag=fill is not None),
+            decode_sql,
             order_col="bucket_epoch",
             reverse=reverse,
+            # rollup_<g> is partitioned by stream_id: the read is pruned
+            # to this stream's files, so one task can scan them
+            stream_files=True,
         )
 
     def register_views(self, prefix: str = "ds_") -> list[str]:
@@ -748,10 +785,10 @@ class Datastream:
         df = self._raw_df()
         if df is None:
             return self._empty_raw().select("stream_id", "ts", "value_json")
-        df = df.where(
-            (F.col("stream_id") == stream_id) & F.col("value_json").isNotNull()
+        df = self._apply_bounds(
+            df.where("value_json IS NOT NULL"), "ts", g, start, end, None, None,
+            [stream_id],
         )
-        df = self._apply_bounds(df, "ts", g, start, end, None, None)
         return df.select("stream_id", "ts", "value_json")
 
     def graph_vertices(self, stream_id: str, **bounds) -> DataFrame:
@@ -817,9 +854,8 @@ class Datastream:
         if raw_ids:
             df = self._raw_df()
             if df is not None:
-                part = df.where(F.col("stream_id").isin(raw_ids))
                 part = self._apply_bounds(
-                    part, "ts", g, start, end, start_exclusive, end_exclusive
+                    df, "ts", g, start, end, start_exclusive, end_exclusive, raw_ids
                 )
                 parts.append(("raw", part.select("stream_id", "ts", "value")))
         if rollup_ids:
@@ -837,28 +873,26 @@ class Datastream:
                 tbl = self.store.read(f"rollup_{level}")
                 if tbl is None:
                     continue
-                part = tbl.where(F.col("stream_id").isin(sids))
                 part = self._apply_bounds(
-                    part,
+                    tbl,
                     "bucket_epoch",
                     granularity_by_name(level),
                     start,
                     end,
                     start_exclusive,
                     end_exclusive,
+                    sids,
                 )
                 parts.append(("rollup", part.drop("p_date")))
         rollup_parts = [p for kind, p in parts if kind == "rollup"]
         raw_parts = [p for kind, p in parts if kind == "raw"]
         if rollup_parts and raw_parts:
             # unify: raw rows presented as single-point buckets
-            base = rollup_parts[0].select(
-                "stream_id", "bucket_epoch", "v_count", "v_sum", "v_min",
-                "v_max", "v_sum_squares",
-            )
-            out = base
+            cols = ["stream_id", "bucket_epoch", "v_count", "v_sum", "v_min",
+                    "v_max", "v_sum_squares"]
+            out = rollup_parts[0].select(*cols)
             for p in rollup_parts[1:] + [_points_as_buckets(p) for p in raw_parts]:
-                out = out.unionByName(p.select(*base.columns))
+                out = out.unionByName(p.select(*cols))
             return out
         if rollup_parts:
             out = rollup_parts[0]
@@ -910,18 +944,10 @@ class Datastream:
         for d in matched:
             by_group.setdefault((d.highest_granularity, d.preaggregated), []).append(d)
 
-        def prune(df, d_secs):
-            if "p_date" in df.columns:
-                df = df.where(
-                    (F.col("p_date") >= _date_str(s_ep))
-                    & (F.col("p_date") <= _date_str(e_ep + d_secs))
-                )
-            return df
-
-        unions: list[DataFrame] = []
+        parts: list[DataFrame] = []
         for (g_name, preagg), descs in by_group.items():
             g = granularity_by_name(g_name)
-            sids = [d.stream_id for d in descs]
+            in_group = _sql_in("stream_id", [d.stream_id for d in descs])
             lo = (s_ep // g.seconds) * g.seconds if preagg else s_ep
             hi = (e_ep // g.seconds) * g.seconds if preagg else e_ep
             if lo >= hi:
@@ -961,66 +987,74 @@ class Datastream:
                 hi = (hi // finest_d) * finest_d
                 if lo >= hi:
                     continue
-            # frames only for the levels the minimal cover reads
-            levels: dict[int, DataFrame] = {}
-            for d_secs, _, _ in rollup_route.range_cover(lo, hi, usable):
-                if d_secs in levels:
-                    continue
-                src = self._raw_df() if d_secs == 1 else self.store.read(usable[d_secs])
-                part = prune(src, d_secs).where(F.col("stream_id").isin(sids))
-                levels[d_secs] = _points_as_buckets(part) if d_secs == 1 else part
-            unions.append(
-                rollup_route.segment_union(levels, lo, hi, key="stream_id")
-            )
-        if not unions:
+            # frames only for the levels the minimal cover reads: one
+            # filter (dates, streams, the level's segments) and one
+            # projection to the built-in merge forms per level
+            for d_secs, ranges in rollup_route.level_ranges(lo, hi, usable).items():
+                if d_secs == 1:
+                    src, bucket, merge = self._raw_df(), _RAW_BUCKET_SQL, _POINT_MERGE_SQL
+                else:
+                    src = self.store.read(usable[d_secs])
+                    bucket, merge = "bucket_epoch", rollup_route.MERGE_COLS
+                cond = (
+                    f"p_date >= '{_date_str(s_ep)}'"
+                    f" AND p_date <= '{_date_str(e_ep + d_secs)}'"
+                    f" AND {in_group} AND ({rollup_route.ranges_sql(bucket, ranges)})"
+                )
+                parts.append(src.where(cond).selectExpr("stream_id", *merge))
+        if not parts:
             return self._empty_range_agg()
-        u = unions[0]
-        for p in unions[1:]:
+        u = parts[0]
+        for p in parts[1:]:
             u = u.unionByName(p)
+        # only the built-in merge forms: raw one-point buckets carry no
+        # custom downsampler columns
         return rollup_ops.finish_columns(
-            u.groupBy("stream_id").agg(*rollup_ops.merge_rollup_aggs())
+            u.groupBy("stream_id").agg(*rollup_ops.merge_rollup_aggs(custom=False))
         )
 
-    def _apply_bounds(self, df, col, g, start, end, start_ex, end_ex):
-        """P2: bounds rounded to the queried granularity, then >=/>/<=/<
-        (mongodb.py:~1050 [MED]).
+    def _apply_bounds(self, df, col, g, start, end, start_ex, end_ex, stream_ids):
+        """The rows of ``stream_ids`` within the bounds, as ONE ``where``.
+        P2: bounds rounded to the queried granularity, then >=/>/<=/<
+        on the row's bucket (mongodb.py:~1050 [MED]).
 
-        The comparison column is a *derived* bucket expression, which
-        Catalyst cannot push into partition pruning — so the same bounds
-        are ALSO emitted as literal ``p_date`` predicates (widened by
-        one granularity so no qualifying bucket is cut). At 100 TB this
-        is the reference's ObjectId-range trick: the scan touches only
-        the date partitions the window can reach."""
+        ``col`` is ``bucket_epoch`` (rollup rows) or ``ts`` (raw rows,
+        whose bucket is ``floor(ts / g) * g``; as every rounded bound
+        is a multiple of ``g``, each bucket bound is an exact ``ts``
+        bound). The same bounds are ALSO emitted as literal ``p_date``
+        predicates (widened by one granularity so no qualifying bucket
+        is cut). At 100 TB this is the reference's ObjectId-range
+        trick: the scan touches only the date partitions the window
+        can reach."""
         def rounded_epoch(ts):
             return _us(g.round_timestamp(_to_utc_naive(ts))) // 1_000_000
 
-        c = (
-            F.col(col)
-            if col == "bucket_epoch"
-            else F.floor(F.unix_micros(F.col(col)) / 1_000_000 / g.seconds) * g.seconds
-        )
+        def bucket_cmp(op, e):
+            if col == "bucket_epoch":
+                return f"bucket_epoch {op} {e}"
+            op, e = {
+                ">=": (">=", e), ">": (">=", e + g.seconds),
+                "<=": ("<", e + g.seconds), "<": ("<", e),
+            }[op]
+            return f"ts {op} timestamp_seconds({e})"
+
+        conds = [_sql_in("stream_id", stream_ids)]
         lo = hi = None
-        if start is not None:
-            e = rounded_epoch(start)
-            df, lo = df.where(c >= e), e
-        if start_ex is not None:
-            e = rounded_epoch(start_ex)
-            df = df.where(c > e)
-            lo = e if lo is None else max(lo, e)
-        if end is not None:
-            e = rounded_epoch(end)
-            df, hi = df.where(c <= e), e
-        if end_ex is not None:
-            e = rounded_epoch(end_ex)
-            df = df.where(c < e)
-            hi = e if hi is None else min(hi, e)
-        if "p_date" in df.columns:
-            if lo is not None:
-                df = df.where(F.col("p_date") >= _date_str(lo))
-            if hi is not None:
-                # rows in the last bucket can spill into the next day
-                df = df.where(F.col("p_date") <= _date_str(hi + g.seconds))
-        return df
+        for ts, op in ((start, ">="), (start_ex, ">"), (end, "<="), (end_ex, "<")):
+            if ts is None:
+                continue
+            e = rounded_epoch(ts)
+            conds.append(bucket_cmp(op, e))
+            if op[0] == ">":
+                lo = e if lo is None else max(lo, e)
+            else:
+                hi = e if hi is None else min(hi, e)
+        if lo is not None:
+            conds.append(f"p_date >= '{_date_str(lo)}'")
+        if hi is not None:
+            # rows in the last bucket can spill into the next day
+            conds.append(f"p_date <= '{_date_str(hi + g.seconds)}'")
+        return df.where(" AND ".join(conds))
 
     def _empty_raw(self):
         return self.spark.createDataFrame(
@@ -1736,25 +1770,49 @@ def _arrow_frame(
     return spark.createDataFrame(table, schema)
 
 
+#: A raw point's 1-second bucket, as SQL.
+_RAW_BUCKET_SQL = "CAST(unix_micros(ts) / 1000000 AS BIGINT)"
+
+#: A raw point's built-in merge forms, as SQL (a one-point bucket).
+_POINT_MERGE_SQL = (
+    "CASE WHEN value IS NOT NULL THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+    " AS v_count",
+    "value AS v_sum",
+    "value AS v_min",
+    "value AS v_max",
+    "value * value AS v_sum_squares",
+    "CAST(1 AS BIGINT) AS t_count",
+    "ts AS t_first",
+    "ts AS t_last",
+    "unix_micros(ts) AS t_sum_micros",
+)
+
+#: Rollup columns that decode from epoch µs (the time downsamplers).
+_TIME_COLS = {f"t_{n}" for n in rollup_ops.TIME_DOWNSAMPLERS}
+
+#: A raw cursor row's decode projection: ``ts`` as epoch µs.
+_RAW_DECODE_SQL = ("stream_id", "unix_micros(ts) AS ts", "value", "value_json")
+
+_EPOCH = _dt.datetime(1970, 1, 1)
+
+
 def _points_as_buckets(df: DataFrame) -> DataFrame:
-    """Raw points as one-point merge-form buckets (``aggregate_range``'s
-    1-second level)."""
-    one = F.lit(1).cast("bigint")
-    return df.select(
-        "stream_id",
-        (F.unix_micros("ts") / 1_000_000).cast("bigint").alias("bucket_epoch"),
-        F.when(F.col("value").isNotNull(), one)
-        .otherwise(F.lit(0).cast("bigint"))
-        .alias("v_count"),
-        F.col("value").alias("v_sum"),
-        F.col("value").alias("v_min"),
-        F.col("value").alias("v_max"),
-        (F.col("value") * F.col("value")).alias("v_sum_squares"),
-        one.alias("t_count"),
-        F.col("ts").alias("t_first"),
-        F.col("ts").alias("t_last"),
-        F.unix_micros("ts").alias("t_sum_micros"),
+    """Raw points as one-point merge-form buckets."""
+    return df.selectExpr(
+        "stream_id", f"{_RAW_BUCKET_SQL} AS bucket_epoch", *_POINT_MERGE_SQL
     )
+
+
+def _sql_in(col: str, values: list[str]) -> str:
+    """``col IN (...)`` over string literals, as SQL."""
+    quoted = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values)
+    return f"{col} IN ({', '.join(quoted)})"
+
+
+def _utc(us: int | None) -> _dt.datetime | None:
+    """Epoch µs as a naive UTC datetime, independent of the host's
+    time zone (PySpark's own timestamp decoding reads local time)."""
+    return None if us is None else _EPOCH + _dt.timedelta(microseconds=us)
 
 
 def _decode_raw(value_type: str):
@@ -1762,7 +1820,7 @@ def _decode_raw(value_type: str):
         v = row["value"]
         if value_type != "numeric" and row["value_json"] is not None:
             v = json.loads(row["value_json"])
-        return {"stream_id": row["stream_id"], "t": row["ts"], "v": v}
+        return {"stream_id": row["stream_id"], "t": _utc(row["ts"]), "v": v}
 
     return decode
 
@@ -1770,7 +1828,11 @@ def _decode_raw(value_type: str):
 def _decode_rollup(vds: list[str], tds: list[str], filled_flag: bool = False):
     def decode(row):
         v = {n: row[f"v_{n}"] for n in vds if f"v_{n}" in row.__fields__}
-        t = {n: row[f"t_{n}"] for n in tds if f"t_{n}" in row.__fields__}
+        t = {
+            n: _utc(row[c]) if c in _TIME_COLS else row[c]
+            for n in tds
+            if (c := f"t_{n}") in row.__fields__
+        }
         out = {"stream_id": row["stream_id"], "t": t, "v": v}
         if filled_flag:
             out["filled"] = row["filled"]

@@ -133,22 +133,34 @@ def raw_rollup_aggs(value: str = "value", ts: str = "ts") -> list[Column]:
     ]
 
 
-def merge_rollup_aggs() -> list[Column]:
-    """Merge forms rollup(g) -> rollup(g+1) (A11 cascade, §1.4)."""
-    return [
-        F.sum("v_count").alias("v_count"),
-        F.sum("v_sum").alias("v_sum"),
-        F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max"),
-        F.sum("v_sum_squares").alias("v_sum_squares"),
-        F.sum("t_count").alias("t_count"),
-        F.min("t_first").alias("t_first"),
-        F.max("t_last").alias("t_last"),
-        F.sum("t_sum_micros").alias("t_sum_micros"),
-    ] + [
-        ds.merge(F.col(f"v_{ds.name}")).alias(f"v_{ds.name}")
-        for ds in CUSTOM_DOWNSAMPLERS.values()
-    ]
+#: Merge forms of the built-in statistics, rollup(g) -> rollup(g+1),
+#: as SQL: one ``F.expr`` each instead of a chain of Column calls.
+_MERGE_SQL = (
+    "sum(v_count) AS v_count",
+    "sum(v_sum) AS v_sum",
+    "min(v_min) AS v_min",
+    "max(v_max) AS v_max",
+    "sum(v_sum_squares) AS v_sum_squares",
+    "sum(t_count) AS t_count",
+    "min(t_first) AS t_first",
+    "max(t_last) AS t_last",
+    "sum(t_sum_micros) AS t_sum_micros",
+)
+
+
+def merge_rollup_aggs(custom: bool = True) -> list[Column]:
+    """Merge forms rollup(g) -> rollup(g+1) (A11 cascade, §1.4).
+
+    ``custom=False`` leaves out the registered custom downsamplers: a
+    range merge that also folds in raw points (one-point buckets carry
+    only the built-in merge forms) can merge those alone."""
+    aggs = [F.expr(e) for e in _MERGE_SQL]
+    if custom:
+        aggs += [
+            ds.merge(F.col(f"v_{ds.name}")).alias(f"v_{ds.name}")
+            for ds in CUSTOM_DOWNSAMPLERS.values()
+        ]
+    return aggs
 
 
 #: Merge-form columns, in the order ``raw_rollup_aggs`` and
@@ -193,31 +205,30 @@ def rollup_schema(spark: SparkSession) -> T.StructType:
     return T.StructType([T.StructField(f.name, f.dataType) for f in out.schema])
 
 
+#: The statistics ``finish_columns`` derives, as SQL, in output order.
+_FINISH_SQL = (
+    "v_sum / v_count AS v_mean",
+    "sqrt(greatest(v_sum_squares / v_count - (v_sum / v_count) * (v_sum / v_count),"
+    " 0.0D)) AS v_std_dev",
+    "timestamp_micros(CAST(t_sum_micros / t_count AS BIGINT)) AS t_mean",
+)
+
+
 def finish_columns(df: DataFrame) -> DataFrame:
-    """Finish-time statistics from merge-form columns (A6, A7, A10).
+    """Finish-time statistics from merge-form columns (A6, A7, A10),
+    appended after ``df``'s columns in one projection.
 
     std_dev is the *population* form sqrt(E[x^2] - E[x]^2), computed
     from (count, sum, sum_squares) exactly as the reference's finish()
     does (mongodb.py:~1170 [MED]; pinned population-vs-sample by the
     Q-A1 oracle probe). Clamped at 0 against FP cancellation.
     """
-    mean = F.col("v_sum") / F.col("v_count")
-    var = F.greatest(
-        F.col("v_sum_squares") / F.col("v_count") - mean * mean, F.lit(0.0)
-    )
-    out = (
-        df.withColumn("v_mean", mean)
-        .withColumn("v_std_dev", F.sqrt(var))
-        .withColumn(
-            "t_mean",
-            F.timestamp_micros(
-                (F.col("t_sum_micros") / F.col("t_count")).cast("bigint")
-            ),
-        )
-    )
-    for ds in CUSTOM_DOWNSAMPLERS.values():
-        if ds.finish is not None and f"v_{ds.name}" in out.columns:
-            out = ds.finish(out)
+    out = df.selectExpr("*", *_FINISH_SQL)
+    if CUSTOM_DOWNSAMPLERS:
+        cols = set(out.columns)
+        for ds in CUSTOM_DOWNSAMPLERS.values():
+            if ds.finish is not None and f"v_{ds.name}" in cols:
+                out = ds.finish(out)
     return out
 
 

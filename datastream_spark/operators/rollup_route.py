@@ -31,7 +31,6 @@ a few hundred merged rows), regardless of how many levels contribute.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .rollup import MERGE_FIELDS, finish_columns, merge_rollup_aggs
 
@@ -86,6 +85,32 @@ def range_cover(
     return sorted(segs, key=lambda s: s[1])
 
 
+def level_ranges(start: int, end: int, durations) -> dict[int, list[tuple[int, int]]]:
+    """``range_cover`` of ``[start, end)`` grouped by level: duration ->
+    that level's ``(lo, hi)`` segments, levels in cover order."""
+    by_level: dict[int, list[tuple[int, int]]] = {}
+    for d, lo, hi in range_cover(start, end, durations):
+        by_level.setdefault(d, []).append((lo, hi))
+    return by_level
+
+
+def ranges_sql(bucket: str, ranges) -> str:
+    """One SQL predicate for a level's segments: the OR of
+    ``lo <= bucket < hi`` over ``ranges``, where ``bucket`` is a column
+    or SQL expression giving the bucket start in epoch seconds.
+
+    ONE disjunctive filter per level, not one branch per segment:
+    range_cover emits up to two ragged-edge segments plus an interior
+    per level, and a per-segment ``where`` re-plans the level's ENTIRE
+    subtree each time (for ladder frames built from raw that is a full
+    scan+agg per segment — measured 22 scans / 24 exchanges on q_a5).
+    Segments are pairwise disjoint, so the OR'd filter over one copy of
+    the frame yields the exact same row multiset, and the range
+    predicates still push down to the scan (Spark prunes on
+    OR-of-ranges)."""
+    return " OR ".join(f"({bucket} >= {lo} AND {bucket} < {hi})" for lo, hi in ranges)
+
+
 def segment_union(
     level_frames: dict[int, DataFrame],
     start: int,
@@ -100,27 +125,12 @@ def segment_union(
     covered range). Returns unaggregated rows — callers merge with one
     ``groupBy(key)`` (see ``route_range_aggregate``), so several
     segment unions (e.g. per stream-group) can share a single final
-    shuffle."""
-    segs = range_cover(start, end, level_frames.keys())
-    # ONE disjunctive filter per level, not one branch per segment:
-    # range_cover emits up to two ragged-edge segments plus an
-    # interior per level, and a per-segment `where` re-plans the
-    # level's ENTIRE subtree each time (for ladder frames built from
-    # raw that is a full scan+agg per segment — measured 22 scans /
-    # 24 exchanges on q_a5). Segments are pairwise disjoint, so the
-    # OR'd filter over one copy of the frame yields the exact same
-    # row multiset, and the range predicates still push down to the
-    # scan (Spark prunes on OR-of-ranges).
-    by_level: dict[int, list[tuple[int, int]]] = {}
-    for d, lo, hi in segs:
-        by_level.setdefault(d, []).append((lo, hi))
-    parts = []
-    for d, ranges in by_level.items():
-        cond = None
-        for lo, hi in ranges:
-            c = (F.col(bucket_col) >= lo) & (F.col(bucket_col) < hi)
-            cond = c if cond is None else (cond | c)
-        parts.append(level_frames[d].where(cond).select(key, *MERGE_COLS))
+    shuffle. Only the built-in merge forms are carried: they are what
+    every level can supply."""
+    parts = [
+        level_frames[d].where(ranges_sql(bucket_col, ranges)).selectExpr(key, *MERGE_COLS)
+        for d, ranges in level_ranges(start, end, level_frames.keys()).items()
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -140,4 +150,4 @@ def route_range_aggregate(
     to aggregating raw datapoints over the same range (oracle probe
     q_a5_rollup_route)."""
     u = segment_union(level_frames, start, end, key=key, bucket_col=bucket_col)
-    return finish_columns(u.groupBy(key).agg(*merge_rollup_aggs()))
+    return finish_columns(u.groupBy(key).agg(*merge_rollup_aggs(custom=False)))

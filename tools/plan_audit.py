@@ -226,11 +226,14 @@ EXPECTATIONS: dict[str, tuple[list[str], list[str]]] = {
         ["Generate", "partial_min", "array_sort"],
         ["Window", "rangepartitioning", "CartesianProduct"],
     ),
-    # Bloom decontamination: survivors verify through a broadcast hash
-    # join; the Arrow-batched membership filter is the only Python.
+    # Bloom decontamination, JVM-side end to end: the one-row bitmap
+    # rides a broadcast nested-loop join whose condition is the k-probe
+    # membership test, survivors verify through a broadcast hash join,
+    # and no Python evaluation node is left in the plan.
     "q_x19_decontaminate_bloom": (
-        ["ArrowEvalPython", "BroadcastHashJoin"],
-        ["SortMergeJoin", "CartesianProduct"],
+        ["BroadcastNestedLoopJoin Inner BuildRight", "shiftright(element_at(",
+         "BroadcastHashJoin"],
+        ["ArrowEvalPython", "BatchEvalPython", "SortMergeJoin", "CartesianProduct"],
     ),
     # LM scoring: vocabulary-bounded count tables join back as
     # broadcasts; one final per-doc two-phase agg, no windows.
