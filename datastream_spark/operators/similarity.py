@@ -6,9 +6,10 @@
 - ``cosine_topk_ivf``: the scale path — coarse quantization (IVF):
   every vector is assigned to its nearest centroid once; queries probe
   only ``n_probe`` nearest cells, cutting the scanned fraction to
-  ~n_probe/n_centroids of the corpus. Deterministic centroid seeding
-  here (first-N by id); swap in ``pyspark.ml.clustering.KMeans``
-  centroids for real recall (hook provided).
+  ~n_probe/n_centroids of the corpus. The default centroids are a
+  deterministic scaffold (first-N by id); pass ``train_ivf_centroids``
+  (KMeans from a seeded, layout-free start, so the same centres on
+  any core count or partitioning) for real recall.
 - ``near_dup_pairs``: all pairs above a cosine threshold (X-dedup by
   embedding); brute at test scale, IVF-bucketed at 100 TB.
 
@@ -121,22 +122,45 @@ def train_ivf_centroids(
     seed: int = 42,
     max_iter: int = 20,
 ) -> DataFrame:
-    """Real IVF training: distributed KMeans (pyspark.ml) over the
-    corpus, fixed seed for reproducibility. Returns (cell_id, _cv) for
-    ``assign_ivf_cells``/``cosine_topk_ivf``. At 100 TB, train on a
+    """Real IVF training: distributed KMeans over the corpus. Returns
+    (cell_id, _cv) for ``assign_ivf_cells``/``cosine_topk_ivf``.
+
+    The start is a function of the rows and ``seed`` only: the
+    ``n_centroids`` distinct vectors with the smallest
+    ``xxhash64(seed, vector)``, ties broken by the vector (one top-k
+    job). From there ``pyspark.mllib`` KMeans runs up to ``max_iter``
+    Lloyd iterations (``initialModel``; Euclidean, tolerance 1e-4).
+    The centres therefore depend on neither the core count nor the
+    input partitioning, up to the order of float summation. (The
+    ``k-means||`` init of ``pyspark.ml`` KMeans draws its candidates
+    partition by partition, so its seed picks different starts under
+    each layout.) ``cell_id`` numbers the centres in start order.
+
+    A corpus with fewer distinct vectors than ``n_centroids`` yields
+    one centre per distinct vector. At 100 TB, train on a
     ``hash_sample`` of the corpus — centroid quality converges long
     before the full pass does."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    from pyspark.mllib.clustering import KMeans, KMeansModel
 
-    feats = _as_double(embeddings.select(vec_col), vec_col).select(
-        array_to_vector(F.col(vec_col)).alias("features")
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        f"cell_id int, _cv array<double>",
+    e = _as_double(embeddings.select(vec_col), vec_col)
+    init = [
+        r[0]
+        for r in e.distinct()
+        .orderBy(F.xxhash64(F.lit(seed), F.col(vec_col)), F.col(vec_col))
+        .limit(n_centroids)
+        .collect()
+    ]
+    centres = []
+    if init:
+        centres = KMeans.train(
+            e.rdd.map(lambda r: r[0]),
+            k=len(init),
+            maxIterations=max_iter,
+            initialModel=KMeansModel(init),
+        ).clusterCenters
+    return embeddings.sparkSession.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centres)],
+        "cell_id int, _cv array<double>",
     )
 
 
