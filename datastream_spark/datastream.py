@@ -304,7 +304,8 @@ class Datastream:
     def vacuum(self) -> dict:
         """Maintenance: physically purge deleted streams' raw rows and
         compact fragmented date partitions, with one aggregate and one
-        partition overwrite through the store (sources/maintenance.py).
+        partition overwrite through the store, and remove their derived
+        and rollup ``stream_id=`` partitions (sources/maintenance.py).
         Reads are correct without it (registry-first filtering); this
         reclaims storage and file handles — run it like the reference's
         cron maintenance worker. ``partitions_rewritten`` counts date
@@ -418,29 +419,10 @@ class Datastream:
             raise IncompatibleTypes(
                 f"{d.stream_id} already holds scalar datapoints"
             )
-        bad = set(value) - set(rollup_ops.VALUE_DOWNSAMPLERS)
-        if bad:
-            raise InvalidOperatorArguments(f"unknown downsamplers {sorted(bad)}")
-        if "count" not in value or value["count"] < 1:
-            raise InvalidOperatorArguments("pre-aggregated append needs count>=1")
-        n = float(value["count"])
-        mean = value.get("mean")
-        v_sum = value.get("sum", mean * n if mean is not None else None)
-        ss = value.get("sum_squares")
-        if ss is None and value.get("std_dev") is not None and mean is not None:
-            ss = (value["std_dev"] ** 2 + mean**2) * n
         row = {
             "stream_id": d.stream_id,
             "bucket_epoch": _us(g.round_timestamp(ts)) // 1_000_000,
-            "v_count": int(n),
-            "v_sum": float(v_sum) if v_sum is not None else None,
-            "v_min": float(value["min"]) if "min" in value else None,
-            "v_max": float(value["max"]) if "max" in value else None,
-            "v_sum_squares": float(ss) if ss is not None else None,
-            "t_count": 1,
-            "t_first": ts,
-            "t_last": ts,
-            "t_sum_micros": _us(ts),
+            **rollup_ops.preagg_merge_row(value, _us(ts)),
         }
         self._preagg_buffer.setdefault(g.name, []).append(row)
         d.preaggregated = True
@@ -556,6 +538,10 @@ class Datastream:
         )
 
     def flush(self) -> None:
+        # appends buffer before they touch the registry, so with both
+        # buffers empty a read's flush has nothing to commit
+        if not self._buffer and not self._preagg_buffer:
+            return
         touched = sorted({r["stream_id"] for r in self._buffer})
         changed_from: dict[str, int] = {}
         for r in self._buffer:
@@ -887,13 +873,13 @@ class Datastream:
         rollup_parts = [p for kind, p in parts if kind == "rollup"]
         raw_parts = [p for kind, p in parts if kind == "raw"]
         if rollup_parts and raw_parts:
-            # unify: raw rows presented as single-point buckets
-            cols = ["stream_id", "bucket_epoch", "v_count", "v_sum", "v_min",
-                    "v_max", "v_sum_squares"]
-            out = rollup_parts[0].select(*cols)
-            for p in rollup_parts[1:] + [_points_as_buckets(p) for p in raw_parts]:
-                out = out.unionByName(p.select(*cols))
-            return out
+            # unify on the merge forms: raw rows as one-point buckets
+            cols = ["stream_id", "bucket_epoch", *rollup_ops.MERGE_COLS]
+            return functools.reduce(
+                DataFrame.unionByName,
+                [p.select(*cols) for p in rollup_parts]
+                + [rollup_ops.points_as_buckets(p) for p in raw_parts],
+            )
         if rollup_parts:
             out = rollup_parts[0]
             for p in rollup_parts[1:]:
@@ -992,26 +978,18 @@ class Datastream:
             # projection to the built-in merge forms per level
             for d_secs, ranges in rollup_route.level_ranges(lo, hi, usable).items():
                 if d_secs == 1:
-                    src, bucket, merge = self._raw_df(), _RAW_BUCKET_SQL, _POINT_MERGE_SQL
+                    src = self._raw_df()
+                    bucket, merge = rollup_ops.POINT_BUCKET_SQL, rollup_ops.POINT_MERGE_SQL
                 else:
                     src = self.store.read(usable[d_secs])
-                    bucket, merge = "bucket_epoch", rollup_route.MERGE_COLS
+                    bucket, merge = "bucket_epoch", rollup_ops.MERGE_COLS
                 cond = (
                     f"p_date >= '{_date_str(s_ep)}'"
                     f" AND p_date <= '{_date_str(e_ep + d_secs)}'"
                     f" AND {in_group} AND ({rollup_route.ranges_sql(bucket, ranges)})"
                 )
                 parts.append(src.where(cond).selectExpr("stream_id", *merge))
-        if not parts:
-            return self._empty_range_agg()
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        # only the built-in merge forms: raw one-point buckets carry no
-        # custom downsampler columns
-        return rollup_ops.finish_columns(
-            u.groupBy("stream_id").agg(*rollup_ops.merge_rollup_aggs(custom=False))
-        )
+        return rollup_route.merge_range(parts) if parts else self._empty_range_agg()
 
     def _apply_bounds(self, df, col, g, start, end, start_ex, end_ex, stream_ids):
         """The rows of ``stream_ids`` within the bounds, as ONE ``where``.
@@ -1062,12 +1040,9 @@ class Datastream:
         )
 
     def _empty_range_agg(self):
+        fields = [f for f in rollup_ops.ROLLUP_SCHEMA if f.name != "bucket_epoch"]
         return self.spark.createDataFrame(
-            [],
-            "stream_id string, v_count long, v_sum double, v_min double, "
-            "v_max double, v_sum_squares double, t_count long, "
-            "t_first timestamp, t_last timestamp, t_sum_micros long, "
-            "v_mean double, v_std_dev double, t_mean timestamp",
+            [], T.StructType([T.StructField("stream_id", T.StringType()), *fields])
         )
 
     def _empty_rollup(self):
@@ -1325,49 +1300,26 @@ class Datastream:
         # [min(wm), cutoff] can — emitted as literal p_date predicates
         # so each incremental job reads only the new date partitions.
         global_lo = min(w["wm_day"] for w in work)
-
-        def prune_dates(df):
-            if "p_date" not in df.columns:
-                return df
-            if global_lo > -(2**61):
-                df = df.where(F.col("p_date") >= _date_str(global_lo))
-            return df.where(F.col("p_date") <= _date_str(cutoff))
-
-        if finer == start_g and not preagg:
-            src = self._raw_df()
-            if src is None:
-                return
-            sliced = (
-                prune_dates(src)
-                .join(wm_df, "stream_id")
-                .withColumn("_b", bucket_epoch(F.col("ts"), coarser.seconds))
-                .where((F.col("_b") >= F.col("wm_day")) & (F.col("_b") < cutoff))
-            )
-            out = sliced.groupBy("stream_id", F.col("_b").alias("bucket_epoch")).agg(
-                *rollup_ops.raw_rollup_aggs()
-            )
+        dates = f"p_date <= '{_date_str(cutoff)}'"
+        if global_lo > -(2**61):
+            dates += f" AND p_date >= '{_date_str(global_lo)}'"
+        from_raw = finer == start_g and not preagg
+        if from_raw:
+            src, bucket = self._raw_df(), bucket_epoch(F.col("ts"), coarser.seconds)
         else:
             src = self.store.read(f"rollup_{finer.name}")
-            if src is None:
-                return
-            sliced = (
-                prune_dates(src)
-                .join(wm_df, "stream_id")
-                .withColumn(
-                    "_b",
-                    (F.floor(F.col("bucket_epoch") / coarser.seconds) * coarser.seconds).cast(
-                        "bigint"
-                    ),
-                )
-                .where((F.col("_b") >= F.col("wm_day")) & (F.col("_b") < cutoff))
-            )
-            out = sliced.groupBy("stream_id", F.col("_b").alias("bucket_epoch")).agg(
-                *rollup_ops.merge_rollup_aggs()
-            )
-        out = rollup_ops.finish_columns(out)
+            bucket = rollup_ops.cascade_bucket(coarser)
+        if src is None:
+            return
+        sliced = (
+            src.where(dates)
+            .join(wm_df, "stream_id")
+            .where((bucket >= F.col("wm_day")) & (bucket < cutoff))
+        )
+        build = rollup_ops.rollup_from_raw if from_raw else rollup_ops.rollup_cascade
         # data before watermark, idempotent overwrite — crash-retry
         # rewrites the same partitions instead of appending duplicates
-        self.store.overwrite_rollup(out, coarser.name)
+        self.store.overwrite_rollup(build(sliced, coarser), coarser.name)
         for d in descs:
             d.downsampled_until[coarser.name] = cutoff
 
@@ -1770,23 +1722,6 @@ def _arrow_frame(
     return spark.createDataFrame(table, schema)
 
 
-#: A raw point's 1-second bucket, as SQL.
-_RAW_BUCKET_SQL = "CAST(unix_micros(ts) / 1000000 AS BIGINT)"
-
-#: A raw point's built-in merge forms, as SQL (a one-point bucket).
-_POINT_MERGE_SQL = (
-    "CASE WHEN value IS NOT NULL THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-    " AS v_count",
-    "value AS v_sum",
-    "value AS v_min",
-    "value AS v_max",
-    "value * value AS v_sum_squares",
-    "CAST(1 AS BIGINT) AS t_count",
-    "ts AS t_first",
-    "ts AS t_last",
-    "unix_micros(ts) AS t_sum_micros",
-)
-
 #: Rollup columns that decode from epoch µs (the time downsamplers).
 _TIME_COLS = {f"t_{n}" for n in rollup_ops.TIME_DOWNSAMPLERS}
 
@@ -1794,13 +1729,6 @@ _TIME_COLS = {f"t_{n}" for n in rollup_ops.TIME_DOWNSAMPLERS}
 _RAW_DECODE_SQL = ("stream_id", "unix_micros(ts) AS ts", "value", "value_json")
 
 _EPOCH = _dt.datetime(1970, 1, 1)
-
-
-def _points_as_buckets(df: DataFrame) -> DataFrame:
-    """Raw points as one-point merge-form buckets."""
-    return df.selectExpr(
-        "stream_id", f"{_RAW_BUCKET_SQL} AS bucket_epoch", *_POINT_MERGE_SQL
-    )
 
 
 def _sql_in(col: str, values: list[str]) -> str:

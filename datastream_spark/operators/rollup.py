@@ -12,6 +12,22 @@ single hash-agg pass (Catalyst collapses the shared sub-aggregates), and
 the cascade is error-free because count/sum/min/max/sum_squares merge
 exactly; mean and std_dev are finish-time derivations.
 
+This module is the one home of the merge-form format (``MERGE_FIELDS``)
+and of its builders. Every consumer goes through it:
+
+- the cascade (``Datastream.downsample_streams``): ``rollup_from_raw``
+  for the first level, ``rollup_cascade`` for each coarser one;
+- the range aggregate (``Datastream.aggregate_range`` and
+  ``rollup_route.route_range_aggregate``, one merge function in
+  ``rollup_route``): covered ladder rows, plus raw points as one-point
+  buckets (``POINT_MERGE_SQL``);
+- ``Datastream.scan``: a mixed raw + rollup read unifies on
+  ``MERGE_COLS`` with ``points_as_buckets``;
+- pre-aggregated appends: ``preagg_merge_row`` turns a member dict
+  into one bucket's merge forms;
+- streaming (``streaming/rollup.py``) and CDC (``sources/cdc.py``):
+  the same aggregate builders over micro-batches and change feeds.
+
 Scale notes (100 TB posture):
 - Partial (map-side) aggregation applies automatically to all of these
   — the shuffle carries one row per (stream_id, bucket), not raw rows.
@@ -133,6 +149,66 @@ def raw_rollup_aggs(value: str = "value", ts: str = "ts") -> list[Column]:
     ]
 
 
+#: A raw point's 1-second bucket start, as SQL.
+POINT_BUCKET_SQL = "CAST(unix_micros(ts) / 1000000 AS BIGINT)"
+
+#: A raw point's built-in merge forms, as SQL: the merge-form row of a
+#: bucket holding that one point (what ``raw_rollup_aggs`` gives it).
+POINT_MERGE_SQL = (
+    "CASE WHEN value IS NOT NULL THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+    " AS v_count",
+    "value AS v_sum",
+    "value AS v_min",
+    "value AS v_max",
+    "value * value AS v_sum_squares",
+    "CAST(1 AS BIGINT) AS t_count",
+    "ts AS t_first",
+    "ts AS t_last",
+    "unix_micros(ts) AS t_sum_micros",
+)
+
+
+def points_as_buckets(df: DataFrame) -> DataFrame:
+    """Raw points (``stream_id``, ``ts``, ``value``) as one-point
+    buckets: ``stream_id``, ``bucket_epoch`` and the built-in merge
+    forms."""
+    return df.selectExpr(
+        "stream_id", f"{POINT_BUCKET_SQL} AS bucket_epoch", *POINT_MERGE_SQL
+    )
+
+
+def preagg_merge_row(value: dict, ts_us: int) -> dict:
+    """The merge forms of a pre-aggregated append (F3, mongodb.py:~850
+    [MED]): ``value`` is a dict of built-in downsampler members taken at
+    ``ts_us`` (epoch µs). ``sum`` falls back to ``mean * count`` and
+    ``sum_squares`` to ``(std_dev² + mean²) * count``; a member the dict
+    cannot give is NULL. The time forms count the append as one point."""
+    from ..exceptions import InvalidOperatorArguments
+
+    bad = set(value) - set(VALUE_DOWNSAMPLERS)
+    if bad:
+        raise InvalidOperatorArguments(f"unknown downsamplers {sorted(bad)}")
+    if "count" not in value or value["count"] < 1:
+        raise InvalidOperatorArguments("pre-aggregated append needs count>=1")
+    n = float(value["count"])
+    mean = value.get("mean")
+    v_sum = value.get("sum", mean * n if mean is not None else None)
+    ss = value.get("sum_squares")
+    if ss is None and value.get("std_dev") is not None and mean is not None:
+        ss = (value["std_dev"] ** 2 + mean**2) * n
+    return {
+        "v_count": int(n),
+        "v_sum": float(v_sum) if v_sum is not None else None,
+        "v_min": float(value["min"]) if "min" in value else None,
+        "v_max": float(value["max"]) if "max" in value else None,
+        "v_sum_squares": float(ss) if ss is not None else None,
+        "t_count": 1,
+        "t_first": ts_us,
+        "t_last": ts_us,
+        "t_sum_micros": ts_us,
+    }
+
+
 #: Merge forms of the built-in statistics, rollup(g) -> rollup(g+1),
 #: as SQL: one ``F.expr`` each instead of a chain of Column calls.
 _MERGE_SQL = (
@@ -176,6 +252,9 @@ MERGE_FIELDS = [
     T.StructField("t_last", T.TimestampType()),
     T.StructField("t_sum_micros", T.LongType()),
 ]
+
+#: Names of the merge-form columns.
+MERGE_COLS = [f.name for f in MERGE_FIELDS]
 
 #: Data columns of every ``rollup_<g>`` file, in the order the writers
 #: emit them: ``bucket_epoch``, the merge forms, then what
@@ -260,13 +339,17 @@ def rollup_cascade(
     rollup_from_raw(raw, g2) for count/sum/min/max/sum_squares, and to
     FP round-off for mean/std_dev.
     """
-    d = coarser.duration_in_seconds()
-    bucket = (F.floor(F.col("bucket_epoch") / d) * d).cast("bigint")
     return finish_columns(
-        rolled.groupBy(F.col(key), bucket.alias("bucket_epoch")).agg(
+        rolled.groupBy(F.col(key), cascade_bucket(coarser).alias("bucket_epoch")).agg(
             *merge_rollup_aggs()
         )
     )
+
+
+def cascade_bucket(coarser: Granularity) -> Column:
+    """The ``coarser`` bucket start of a rolled row's ``bucket_epoch``."""
+    d = coarser.duration_in_seconds()
+    return (F.floor(F.col("bucket_epoch") / d) * d).cast("bigint")
 
 
 def make_histogram_downsampler(

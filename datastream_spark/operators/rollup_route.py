@@ -32,11 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .rollup import MERGE_FIELDS, finish_columns, merge_rollup_aggs
-
-#: The merge-form columns every level frame must carry (rollup.py
-#: raw_rollup_aggs/merge_rollup_aggs output shape).
-MERGE_COLS = [f.name for f in MERGE_FIELDS]
+from .rollup import MERGE_COLS, finish_columns, merge_rollup_aggs
 
 
 def range_cover(
@@ -111,30 +107,16 @@ def ranges_sql(bucket: str, ranges) -> str:
     return " OR ".join(f"({bucket} >= {lo} AND {bucket} < {hi})" for lo, hi in ranges)
 
 
-def segment_union(
-    level_frames: dict[int, DataFrame],
-    start: int,
-    end: int,
-    key: str = "stream_id",
-    bucket_col: str = "bucket_epoch",
-) -> DataFrame:
-    """Union of merge-form rows covering ``[start, end)``, routed per
-    ``range_cover``. Each frame in ``level_frames`` maps a level
-    duration (seconds) to that level's rollup (must carry
-    ``bucket_col`` + MERGE_COLS; buckets must be COMPLETE for the
-    covered range). Returns unaggregated rows — callers merge with one
-    ``groupBy(key)`` (see ``route_range_aggregate``), so several
-    segment unions (e.g. per stream-group) can share a single final
-    shuffle. Only the built-in merge forms are carried: they are what
-    every level can supply."""
-    parts = [
-        level_frames[d].where(ranges_sql(bucket_col, ranges)).selectExpr(key, *MERGE_COLS)
-        for d, ranges in level_ranges(start, end, level_frames.keys()).items()
-    ]
-    out = parts[0]
+def merge_range(parts: list[DataFrame], key: str = "stream_id") -> DataFrame:
+    """The range aggregate of merge-form rows: the union of ``parts``
+    (each ``key`` + ``MERGE_COLS``: a level's covered buckets, or raw
+    points as one-point buckets), ONE ``groupBy(key)`` hash-agg, then
+    the finished statistics. Only the built-in merge forms are merged:
+    they are what every level, and a raw point, can supply."""
+    u = parts[0]
     for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        u = u.unionByName(p)
+    return finish_columns(u.groupBy(key).agg(*merge_rollup_aggs(custom=False)))
 
 
 def route_range_aggregate(
@@ -146,8 +128,15 @@ def route_range_aggregate(
 ) -> DataFrame:
     """Range aggregate ``[start, end)`` per ``key``, answered from the
     ladder: minimal bucket cover -> merge-form union -> ONE hash-agg ->
-    finished statistics (v_mean/v_std_dev/t_mean). Output is identical
-    to aggregating raw datapoints over the same range (oracle probe
-    q_a5_rollup_route)."""
-    u = segment_union(level_frames, start, end, key=key, bucket_col=bucket_col)
-    return finish_columns(u.groupBy(key).agg(*merge_rollup_aggs(custom=False)))
+    finished statistics (v_mean/v_std_dev/t_mean). Each frame in
+    ``level_frames`` maps a level duration (seconds) to that level's
+    rollup (``bucket_col`` + MERGE_COLS; buckets must be COMPLETE for
+    the covered range). Output is identical to aggregating raw
+    datapoints over the same range (oracle probe q_a5_rollup_route)."""
+    return merge_range(
+        [
+            level_frames[d].where(ranges_sql(bucket_col, ranges)).selectExpr(key, *MERGE_COLS)
+            for d, ranges in level_ranges(start, end, level_frames.keys()).items()
+        ],
+        key,
+    )

@@ -651,11 +651,13 @@ def train_pq_codebooks(
     only.
 
     ``method="local"`` (default, the faiss-style shape): collect a
-    deterministic hash-sample (≤ ``sample_cap`` vectors — codebooks
-    are k·(d/m) floats per subspace; centroid quality converges on a
-    sample long before a full pass) and run vectorized Lloyd
-    iterations for ALL m subspaces at once in numpy — total cost is
-    one sample collect, not m sequential distributed fits.
+    deterministic hash-sample: the ≤ ``sample_cap`` vectors with the
+    smallest ``xxhash64(seed, vector)``, ties broken by the vector, in
+    one top-k job (codebooks are k·(d/m) floats per subspace; centroid
+    quality converges on a sample long before a full pass). Start from
+    its first k rows in that order and run vectorized Lloyd iterations
+    for ALL m subspaces at once in numpy. Nothing depends on the
+    input's partitioning or the core count.
     ``method="ml"`` runs m ``pyspark.ml`` KMeans fits over the full
     corpus instead — use it when the corpus genuinely can't be
     sampled, and budget m × (init + max_iter) Spark jobs."""
@@ -664,28 +666,24 @@ def train_pq_codebooks(
     e = _as_double(embeddings.select(vec_col), vec_col)
 
     if method == "local":
-        n = embeddings.count()
-        samp = e
-        if n > sample_cap:
-            samp = e.sample(fraction=min(1.0, 1.2 * sample_cap / n), seed=seed)
-        rows = samp.collect()
+        rows = (
+            e.orderBy(F.xxhash64(F.lit(seed), F.col(vec_col)), F.col(vec_col))
+            .limit(sample_cap)
+            .collect()
+        )
         if not rows:
             raise ValueError("empty corpus")
         # dimension/divisibility come from the collected sample — a
         # separate first(size) probe was one more full-latency driver
         # job per training call (guide §1.2).
-        x = np.stack(
-            [np.asarray(r[vec_col], dtype=np.float64) for r in rows]
-        )[:sample_cap]
+        x = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
         d = x.shape[1]
         if d % m:
             raise ValueError(f"dim {d} not divisible by m={m}")
         sub = d // m
-        rng = np.random.default_rng(seed)
         xs = x.reshape(x.shape[0], m, sub)  # (n, m, sub)
-        # deterministic init: k distinct sample rows per subspace
-        idx = rng.permutation(x.shape[0])[:k]
-        cb = xs[idx].transpose(1, 0, 2).copy()  # (m, k, sub)
+        # deterministic init: the first k sample rows in hash order
+        cb = xs[:k].transpose(1, 0, 2).copy()  # (m, k, sub)
         for _ in range(max_iter):
             # assign: argmin_c |xs - cb|^2 per subspace, all at once
             d2 = ((xs[:, :, None, :] - cb[None, :, :, :]) ** 2).sum(axis=3)

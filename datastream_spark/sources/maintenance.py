@@ -13,9 +13,12 @@ rows, live rows and files, and one dynamic partition overwrite through
 ``TableStore`` rewrites the partitions that need it — deleted-stream
 rows, or more than ``COMPACT_FILE_THRESHOLD`` files — without their
 dead rows, one file each. A partition that needs neither is only read
-by the aggregate, so the job count does not grow with history. With a
-Delta-backed store these become ``DELETE`` + ``OPTIMIZE``; the parquet
-implementation keeps the engine dependency-free.
+by the aggregate, so the job count does not grow with history.
+Deleted streams' derived and rollup rows need no job at all: those
+tables are partitioned by ``stream_id``, so their directories are
+removed. With a Delta-backed store these become ``DELETE`` +
+``OPTIMIZE``; the parquet implementation keeps the engine
+dependency-free.
 """
 
 from __future__ import annotations
@@ -33,7 +36,10 @@ def vacuum(store: TableStore, live_ids: list[str]) -> tuple[int, int]:
     compact date partitions of more than ``COMPACT_FILE_THRESHOLD``
     files. Returns (partitions that had dead rows, over-threshold
     partitions that had none); each rewritten partition ends as one
-    file, and one left without rows is dropped."""
+    file, and one left without rows is dropped. The dead streams'
+    derived and rollup rows go with their ``stream_id=`` directories
+    (``TableStore.drop_stream_partitions``)."""
+    store.drop_stream_partitions(live_ids)
     raw = store.read("datapoints")
     if raw is None:
         return 0, 0

@@ -25,8 +25,10 @@ the resulting DataFrame is reused until the table changes (see
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -175,6 +177,27 @@ class TableStore:
             shutil.rmtree(os.path.join(self.path("datapoints"), f"p_date={d}"))
         if dates:
             self.invalidate("datapoints")
+
+    def drop_stream_partitions(self, live_ids: list[str]) -> None:
+        """Delete the ``stream_id=`` partitions of every stream not in
+        ``live_ids`` from ``datapoints_derived`` and each ``rollup_<g>``
+        table (a directory walk, no Spark job), and a rollup date left
+        empty. A table holding ``_spark_metadata/`` is skipped: a
+        streaming sink owns it, and its log would still list the files."""
+        live = set(live_ids)
+        root = glob.escape(self.root)
+        for d in glob.glob(f"{root}/datapoints_derived/stream_id=*") + glob.glob(
+            f"{root}/rollup_*/p_date=*/stream_id=*"
+        ):
+            table = os.path.relpath(d, self.root).split(os.sep)[0]
+            if unquote(d.rsplit("stream_id=", 1)[1]) in live or os.path.isdir(
+                os.path.join(self.path(table), "_spark_metadata")
+            ):
+                continue
+            shutil.rmtree(d)
+            if table != "datapoints_derived" and not os.listdir(os.path.dirname(d)):
+                os.rmdir(os.path.dirname(d))
+            self.invalidate(table)
 
     def overwrite_derived(self, df: DataFrame, stream_ids: list[str]) -> None:
         """Idempotent recompute: dynamic partition overwrite replaces

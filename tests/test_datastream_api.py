@@ -778,6 +778,31 @@ def test_append_contended(spark, store_root):
     assert len(a.get_data(sid, Granularity.Seconds)) >= 2
 
 
+def test_reads_leave_the_registry_alone(spark, store_root):
+    """A flush with nothing buffered commits nothing: a read does not
+    rewrite ``streams.jsonl``, and a read on a handle whose registry
+    another handle has since saved does not raise
+    StreamAppendContended."""
+    import os
+
+    a = Datastream(spark, store_root)
+    sid = a.ensure_stream({"name": "read-only"})
+    a.append_multiple(
+        [{"stream_id": sid, "value": float(i), "timestamp": T0 + dt.timedelta(seconds=i)}
+         for i in range(5)]
+    )
+    path = os.path.join(store_root, "streams.jsonl")
+    before = (os.stat(path).st_mtime_ns, open(path).read())
+    assert a.scan({"name": "read-only"}).count() == 5
+    assert (os.stat(path).st_mtime_ns, open(path).read()) == before
+    b = Datastream(spark, store_root)
+    b.ensure_stream({"name": "other"})  # b saves the registry
+    out = a.aggregate_range(
+        {"name": "read-only"}, start=T0, end=T0 + dt.timedelta(minutes=1)
+    )
+    assert [r["v_count"] for r in out.collect()] == [5]
+
+
 def test_downsample_consistency_warning(ds):
     """DownsampleConsistencyNotGuaranteed [MED]: an append landing
     behind an advanced watermark is stored but warned about — the

@@ -185,6 +185,18 @@ def test_train_ivf_centroids_independent_of_partitioning(spark):
                 n, cell)
 
 
+def test_train_pq_codebooks_independent_of_partitioning(spark):
+    """``train_pq_codebooks(method="local")`` samples and starts in hash
+    order, so the same rows and seed give the same codebooks whatever
+    the input partitioning."""
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    base = similarity.train_pq_codebooks(e, m=16, k=16, max_iter=10)
+    for n in (3, 7):
+        other = similarity.train_pq_codebooks(e.repartition(n), m=16, k=16, max_iter=10)
+        assert other.shape == base.shape
+        assert float(abs(other - base).max()) <= 1e-9, n
+
+
 def test_chunk_documents_invariants(spark):
     """Structural invariants for every document length 1..80 at chunk
     50 / overlap 10 (one Spark job): chunks tile the token stream with

@@ -209,6 +209,11 @@ def test_aggregate_range_empty(spark, store_root):
     out = ds.aggregate_range({"name": "empty"}, start=T0,
                              end=T0 + dt.timedelta(hours=1))
     assert out.count() == 0
+    sid = ds.ensure_stream({"name": "full"})
+    ds.append(sid, 1.0, T0)
+    full = ds.aggregate_range({"name": "full"}, start=T0,
+                              end=T0 + dt.timedelta(hours=1))
+    assert out.schema == full.schema
 
 
 def test_histogram_sketch_quantile_accuracy(spark):

@@ -91,6 +91,42 @@ def test_vacuum_drops_a_day_of_only_deleted_rows(spark, tmp_path):
     assert [(r.stream_id, r.value) for r in raw.collect()] == [(keep, 1.0)]
 
 
+def test_vacuum_reclaims_derived_and_rollup_rows(spark, tmp_path):
+    """Vacuum also removes deleted streams' ``stream_id=`` partitions
+    from ``datapoints_derived`` and every ``rollup_<g>`` table; the
+    surviving stream's raw and rollup rows read back unchanged."""
+    root = str(tmp_path / "store")
+    ds = Datastream(spark, root)
+    keep = ds.ensure_stream({"name": "keep"})
+    drop = ds.ensure_stream({"name": "drop"})
+    ds.ensure_stream({"name": "drop_d"}, derive_from=[drop], derive_op="derivative")
+    ds.append_multiple(
+        [
+            {"stream_id": sid, "value": float(i * (k + 1)),
+             "timestamp": T0 + dt.timedelta(minutes=10 * i)}
+            for i in range(300)
+            for k, sid in enumerate([keep, drop])
+        ]
+    )
+    ds.downsample_streams(until=T0 + dt.timedelta(days=3))
+    dead = [d["stream_id"] for n in ("drop", "drop_d") for d in ds.find_streams({"name": n})]
+
+    def rows(level):
+        return sorted(ds.get_data(keep, level).df.drop("p_date").collect())
+
+    before = {g: rows(g) for g in ("seconds", "hours", "days")}
+    ds.delete_streams({"name": "drop_d"})
+    ds.delete_streams({"name": "drop"})
+    ds.vacuum()
+    tables = sorted(t for t in os.listdir(root) if t.startswith(("datapoints", "rollup_")))
+    assert "datapoints_derived" in tables and "rollup_days" in tables
+    for t in tables:
+        df = ds.store.read(t)  # None: no partition left
+        assert df is None or df.where(df.stream_id.isin(dead)).count() == 0, t
+    assert {g: rows(g) for g in before} == before
+    assert len(before["seconds"]) == 300 and before["days"]
+
+
 def test_vacuum_jobs_do_not_grow_with_history(spark, tmp_path):
     """Vacuum picks its rewrite set with one aggregate and rewrites it
     with one overwrite: a store of 16 days runs as many Spark jobs as
