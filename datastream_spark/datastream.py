@@ -314,6 +314,8 @@ class Datastream:
         from .sources import maintenance
 
         self.flush()
+        # a stream another handle made since our snapshot is live too
+        self.registry.check_unchanged()
         live = [d.stream_id for d in self.registry.all()]
         purged, compacted = maintenance.vacuum(self.store, live)
         return {"partitions_rewritten": purged, "partitions_compacted": compacted}
@@ -539,7 +541,8 @@ class Datastream:
 
     def flush(self) -> None:
         # appends buffer before they touch the registry, so with both
-        # buffers empty a read's flush has nothing to commit
+        # buffers empty a read's flush has nothing to commit (jobs that
+        # act on the snapshot call registry.check_unchanged themselves)
         if not self._buffer and not self._preagg_buffer:
             return
         touched = sorted({r["stream_id"] for r in self._buffer})
@@ -881,10 +884,9 @@ class Datastream:
                 + [rollup_ops.points_as_buckets(p) for p in raw_parts],
             )
         if rollup_parts:
-            out = rollup_parts[0]
-            for p in rollup_parts[1:]:
-                out = out.unionByName(p, allowMissingColumns=True)
-            return out
+            return functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), rollup_parts
+            )
         if raw_parts:
             return raw_parts[0]
         return self._empty_raw()
@@ -1238,6 +1240,8 @@ class Datastream:
         merge forms, append, advance watermarks. Only complete buckets
         (< floor(until, coarser)) are ever written (§2.9)."""
         self.flush()
+        # the watermarks come from, and the closing save writes, our snapshot
+        self.registry.check_unchanged()
         matched = self.registry.find(query_tags)
         if not matched:
             return

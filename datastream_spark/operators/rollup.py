@@ -13,20 +13,9 @@ the cascade is error-free because count/sum/min/max/sum_squares merge
 exactly; mean and std_dev are finish-time derivations.
 
 This module is the one home of the merge-form format (``MERGE_FIELDS``)
-and of its builders. Every consumer goes through it:
-
-- the cascade (``Datastream.downsample_streams``): ``rollup_from_raw``
-  for the first level, ``rollup_cascade`` for each coarser one;
-- the range aggregate (``Datastream.aggregate_range`` and
-  ``rollup_route.route_range_aggregate``, one merge function in
-  ``rollup_route``): covered ladder rows, plus raw points as one-point
-  buckets (``POINT_MERGE_SQL``);
-- ``Datastream.scan``: a mixed raw + rollup read unifies on
-  ``MERGE_COLS`` with ``points_as_buckets``;
-- pre-aggregated appends: ``preagg_merge_row`` turns a member dict
-  into one bucket's merge forms;
-- streaming (``streaming/rollup.py``) and CDC (``sources/cdc.py``):
-  the same aggregate builders over micro-batches and change feeds.
+and of its builders. The cascade, the range aggregate, ``scan``,
+pre-aggregated appends, streaming and CDC all build and merge rollup
+rows through it.
 
 Scale notes (100 TB posture):
 - Partial (map-side) aggregation applies automatically to all of these

@@ -30,6 +30,8 @@ a few hundred merged rows), regardless of how many levels contribute.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 
 from .rollup import MERGE_COLS, finish_columns, merge_rollup_aggs
@@ -113,9 +115,7 @@ def merge_range(parts: list[DataFrame], key: str = "stream_id") -> DataFrame:
     points as one-point buckets), ONE ``groupBy(key)`` hash-agg, then
     the finished statistics. Only the built-in merge forms are merged:
     they are what every level, and a raw point, can supply."""
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
+    u = functools.reduce(DataFrame.unionByName, parts)
     return finish_columns(u.groupBy(key).agg(*merge_rollup_aggs(custom=False)))
 
 

@@ -652,12 +652,15 @@ def train_pq_codebooks(
 
     ``method="local"`` (default, the faiss-style shape): collect a
     deterministic hash-sample: the ≤ ``sample_cap`` vectors with the
-    smallest ``xxhash64(seed, vector)``, ties broken by the vector, in
-    one top-k job (codebooks are k·(d/m) floats per subspace; centroid
-    quality converges on a sample long before a full pass). Start from
-    its first k rows in that order and run vectorized Lloyd iterations
-    for ALL m subspaces at once in numpy. Nothing depends on the
-    input's partitioning or the core count.
+    smallest ``xxhash64(seed, vector)``, ties broken by the vector
+    (codebooks are k·(d/m) floats per subspace; centroid quality
+    converges on a sample long before a full pass). That is two jobs:
+    a count, then a top-k over the rows below a hash threshold set to
+    keep about 2·``sample_cap`` of them, so the top-k's single reducer
+    receives that many rows, not the corpus. Start from the sample's
+    first k rows in hash order and run vectorized Lloyd iterations for
+    ALL m subspaces at once in numpy. Nothing depends on the input's
+    partitioning or the core count.
     ``method="ml"`` runs m ``pyspark.ml`` KMeans fits over the full
     corpus instead — use it when the corpus genuinely can't be
     sampled, and budget m × (init + max_iter) Spark jobs."""
@@ -666,11 +669,12 @@ def train_pq_codebooks(
     e = _as_double(embeddings.select(vec_col), vec_col)
 
     if method == "local":
-        rows = (
-            e.orderBy(F.xxhash64(F.lit(seed), F.col(vec_col)), F.col(vec_col))
-            .limit(sample_cap)
-            .collect()
-        )
+        h = F.xxhash64(F.lit(seed), F.col(vec_col))
+        n = e.count()
+        if n > 2 * sample_cap:
+            # a row-wise cut by the same hash: deterministic, no shuffle
+            e = e.where(h < int(-(2**63) + 2 * sample_cap / n * 2**64))
+        rows = e.orderBy(h, F.col(vec_col)).limit(sample_cap).collect()
         if not rows:
             raise ValueError("empty corpus")
         # dimension/divisibility come from the collected sample — a

@@ -143,10 +143,8 @@ class StreamRegistry:
         silently drop their watermarks/latest pointers — raise instead
         (the caller reloads and retries). Metadata-only writers
         (ensure_stream etc.) keep last-writer-wins semantics."""
-        if expect_unchanged and self._file_sig() != self._sig:
-            raise StreamAppendContended(
-                "registry changed on disk since load; reload and retry"
-            )
+        if expect_unchanged:
+            self.check_unchanged()
         os.makedirs(self.root, exist_ok=True)
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:
@@ -154,6 +152,15 @@ class StreamRegistry:
                 f.write(d.to_json() + "\n")
         os.replace(tmp, self.path)
         self._sig = self._file_sig()
+
+    def check_unchanged(self) -> None:
+        """``save(expect_unchanged=True)``'s check without the write:
+        raise ``StreamAppendContended`` if another writer saved since
+        this handle loaded or saved."""
+        if self._file_sig() != self._sig:
+            raise StreamAppendContended(
+                "registry changed on disk since load; reload and retry"
+            )
 
     def get(self, stream_id: str) -> StreamDescriptor:
         try:
@@ -330,11 +337,15 @@ class TableStreamRegistry(StreamRegistry):
         self._resolved_cache = (v, res)
         return res
 
-    def save(self, expect_unchanged: bool = False) -> None:
-        if expect_unchanged and self.table.current_version() != self._sig:
+    def check_unchanged(self) -> None:
+        if self.table.current_version() != self._sig:
             raise StreamAppendContended(
                 "registry log advanced since load; reload and retry"
             )
+
+    def save(self, expect_unchanged: bool = False) -> None:
+        if expect_unchanged:
+            self.check_unchanged()
 
         def dirty_rows(commit_v):
             rows = []

@@ -89,7 +89,8 @@ def _version(path: str) -> tuple[int, int | None]:
     streaming sink's ``_spark_metadata/`` log when there is one. Every
     Spark batch commit creates and removes ``_temporary`` or
     ``.spark-staging-*`` in the table directory, and dropping a
-    partition removes its directory there, so each moves the
+    partition removes its directory there or, one level down, bumps
+    the mtime (``drop_stream_partitions``), so each moves the
     directory's mtime; the sink commits into its log."""
     meta = os.path.join(path, "_spark_metadata")
     meta_ns = os.stat(meta).st_mtime_ns if os.path.isdir(meta) else None
@@ -183,9 +184,12 @@ class TableStore:
         ``live_ids`` from ``datapoints_derived`` and each ``rollup_<g>``
         table (a directory walk, no Spark job), and a rollup date left
         empty. A table holding ``_spark_metadata/`` is skipped: a
-        streaming sink owns it, and its log would still list the files."""
+        streaming sink owns it, and its log would still list the files.
+        A rollup partition sits below its date directory, so the table
+        directory's mtime is bumped for other processes' ``_version``."""
         live = set(live_ids)
         root = glob.escape(self.root)
+        touched = set()
         for d in glob.glob(f"{root}/datapoints_derived/stream_id=*") + glob.glob(
             f"{root}/rollup_*/p_date=*/stream_id=*"
         ):
@@ -197,6 +201,9 @@ class TableStore:
             shutil.rmtree(d)
             if table != "datapoints_derived" and not os.listdir(os.path.dirname(d)):
                 os.rmdir(os.path.dirname(d))
+            touched.add(table)
+        for table in touched:
+            os.utime(self.path(table))
             self.invalidate(table)
 
     def overwrite_derived(self, df: DataFrame, stream_ids: list[str]) -> None:

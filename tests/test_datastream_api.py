@@ -803,6 +803,36 @@ def test_reads_leave_the_registry_alone(spark, store_root):
     assert [r["v_count"] for r in out.collect()] == [5]
 
 
+def test_cascade_and_vacuum_refuse_a_stale_registry(spark, tmp_path):
+    """downsample_streams and vacuum act on the handle's registry
+    snapshot. After another handle made and filled a stream, they raise
+    StreamAppendContended instead of purging that stream's rows as dead
+    or saving the registry without it; after a reload they see it."""
+    for backend in REGISTRY_BACKENDS:
+        root = str(tmp_path / backend)
+        a = Datastream(spark, root, registry_backend=backend)
+        a.ensure_stream({"name": "old"})
+        b = Datastream(spark, root, registry_backend=backend)
+        sid = b.ensure_stream({"name": "new"})
+        b.append_multiple(
+            [{"stream_id": sid, "value": float(i), "timestamp": T0 + dt.timedelta(minutes=i)}
+             for i in range(5)]
+        )
+        until = T0 + dt.timedelta(days=1)
+        with pytest.raises(exc.StreamAppendContended):
+            a.vacuum()
+        with pytest.raises(exc.StreamAppendContended):
+            a.downsample_streams(until=until)
+        fresh = Datastream(spark, root, registry_backend=backend)
+        assert [s["stream_id"] for s in fresh.find_streams({"name": "new"})] == [sid]
+        assert len(fresh.get_data(sid, Granularity.Seconds)) == 5
+        a.registry.load()
+        a.vacuum()
+        a.downsample_streams(until=until)
+        assert len(a.get_data(sid, Granularity.Seconds)) == 5, backend
+        assert [p["v"]["count"] for p in a.get_data(sid, Granularity.Hours)] == [5]
+
+
 def test_downsample_consistency_warning(ds):
     """DownsampleConsistencyNotGuaranteed [MED]: an append landing
     behind an advanced watermark is stored but warned about — the

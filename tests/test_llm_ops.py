@@ -188,13 +188,17 @@ def test_train_ivf_centroids_independent_of_partitioning(spark):
 def test_train_pq_codebooks_independent_of_partitioning(spark):
     """``train_pq_codebooks(method="local")`` samples and starts in hash
     order, so the same rows and seed give the same codebooks whatever
-    the input partitioning."""
+    the input partitioning, also when a ``sample_cap`` below half the
+    corpus makes it cut by hash threshold first."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = similarity.train_pq_codebooks(e, m=16, k=16, max_iter=10)
-    for n in (3, 7):
-        other = similarity.train_pq_codebooks(e.repartition(n), m=16, k=16, max_iter=10)
-        assert other.shape == base.shape
-        assert float(abs(other - base).max()) <= 1e-9, n
+    for kw in ({}, {"sample_cap": 200}):
+        base = similarity.train_pq_codebooks(e, m=16, k=16, max_iter=10, **kw)
+        for n in (3, 7):
+            other = similarity.train_pq_codebooks(
+                e.repartition(n), m=16, k=16, max_iter=10, **kw
+            )
+            assert other.shape == base.shape
+            assert float(abs(other - base).max()) <= 1e-9, (n, kw)
 
 
 def test_chunk_documents_invariants(spark):

@@ -115,11 +115,18 @@ def test_vacuum_reclaims_derived_and_rollup_rows(spark, tmp_path):
         return sorted(ds.get_data(keep, level).df.drop("p_date").collect())
 
     before = {g: rows(g) for g in ("seconds", "hours", "days")}
+    tables = sorted(t for t in os.listdir(root) if t.startswith(("datapoints", "rollup_")))
+    assert "datapoints_derived" in tables and "rollup_days" in tables
+    mtime = {t: os.stat(os.path.join(root, t)).st_mtime_ns for t in tables}
     ds.delete_streams({"name": "drop_d"})
     ds.delete_streams({"name": "drop"})
     ds.vacuum()
-    tables = sorted(t for t in os.listdir(root) if t.startswith(("datapoints", "rollup_")))
-    assert "datapoints_derived" in tables and "rollup_days" in tables
+    # other processes see the change: every rollup table's mtime moved,
+    # though "keep" leaves each of its date directories in place
+    assert all(
+        os.stat(os.path.join(root, t)).st_mtime_ns != mtime[t]
+        for t in tables if t.startswith("rollup_")
+    )
     for t in tables:
         df = ds.store.read(t)  # None: no partition left
         assert df is None or df.where(df.stream_id.isin(dead)).count() == 0, t
