@@ -506,7 +506,11 @@ class Datastream:
         when its minimum is. The same rows then advance the registry's
         ``earliest_us``/``latest_us``, bound the derived-stream
         propagation and, like ``append``, warn for a stream whose batch
-        lands behind its downsample watermark."""
+        lands behind its downsample watermark.
+
+        If another handle saved the registry since this one loaded it,
+        nothing is written and ``StreamAppendContended`` is raised;
+        reload the registry and append again."""
         stats = (
             df.groupBy("stream_id")
             .agg(
@@ -528,42 +532,61 @@ class Datastream:
             F.col("value").cast("decimal(38,9)").alias("value_dec"),
             F.lit(None).cast("string").alias("value_json"),
         )
-        self.store.append_raw(out)
         for d, lo, hi in descs:
             self._warn_if_behind_watermark(d, lo)
             d.latest_us = max(d.latest_us or 0, hi)
             d.earliest_us = min(d.earliest_us or lo, lo)
-        self.registry.save()
-        self._propagate(
-            [d.stream_id for d, _, _ in descs],
-            changed_from_us={d.stream_id: lo for d, lo, _ in descs},
-        )
+        self._commit(out, {}, {d.stream_id: lo for d, lo, _ in descs})
 
     def flush(self) -> None:
+        """Commit the buffered appends. If another handle saved the
+        registry since this one loaded it, nothing is written, the
+        buffers are dropped and ``StreamAppendContended`` is raised;
+        reload the registry and append again."""
         # appends buffer before they touch the registry, so with both
         # buffers empty a read's flush has nothing to commit (jobs that
         # act on the snapshot call registry.check_unchanged themselves)
         if not self._buffer and not self._preagg_buffer:
             return
-        touched = sorted({r["stream_id"] for r in self._buffer})
+        rows, preagg = self._buffer, self._preagg_buffer
+        self._buffer, self._preagg_buffer = [], {}
         changed_from: dict[str, int] = {}
-        for r in self._buffer:
+        for r in rows:
             us = _us(r["ts"])
             sid = r["stream_id"]
             if sid not in changed_from or us < changed_from[sid]:
                 changed_from[sid] = us
-        if self._buffer:
-            self.store.append_raw(_arrow_frame(self.spark, self._buffer, RAW_SCHEMA))
-            self._buffer = []
-        for g_name, rows in self._preagg_buffer.items():
-            df = _arrow_frame(self.spark, rows, _PREAGG_SCHEMA)
-            self.store.append_rollup(rollup_ops.finish_columns(df), g_name)
-        self._preagg_buffer = {}
-        # append path = optimistic concurrency: committing our registry
-        # snapshot over another writer's save would drop their state
+        self._commit(
+            _arrow_frame(self.spark, rows, RAW_SCHEMA) if rows else None,
+            {
+                g_name: rollup_ops.finish_columns(
+                    _arrow_frame(self.spark, g_rows, _PREAGG_SCHEMA)
+                )
+                for g_name, g_rows in preagg.items()
+            },
+            changed_from,
+        )
+
+    def _commit(
+        self,
+        raw: DataFrame | None,
+        preagg: dict[str, DataFrame],
+        changed_from_us: dict[str, int],
+    ) -> None:
+        """The append path's commit. Saving this handle's registry over
+        another writer's save would drop their streams and watermarks,
+        so the registry is checked before any row is written and saved
+        with ``expect_unchanged=True`` after the rows."""
+        self.registry.check_unchanged()
+        if raw is not None:
+            self.store.append_raw(raw)
+        for g_name, df in preagg.items():
+            self.store.append_rollup(df, g_name)
         self.registry.save(expect_unchanged=True)
-        if touched:
-            self._propagate(touched, changed_from_us=changed_from)
+        if changed_from_us:
+            self._propagate(
+                sorted(changed_from_us), changed_from_us=changed_from_us
+            )
 
     # ------------------------------------------------------------------
     # S4: reads (lifecycle E2)
@@ -587,7 +610,6 @@ class Datastream:
                 F.col("value").cast("decimal(38,9)").alias("value_dec"),
                 F.lit(None).cast("string").alias("value_json"),
                 F.col("p_date").cast("string").alias("p_date"),
-                F.lit(0).alias("stream_bucket"),
             )
             cached = (raw, derived, sel if raw is None else raw.unionByName(sel))
             self._raw_union = cached

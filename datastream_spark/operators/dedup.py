@@ -1375,6 +1375,15 @@ def simhash_candidate_pairs(
     ).where(F.col("hamming") <= max_hamming).select("id_a", "id_b", "hamming")
 
 
+def _simhash_band_width(bits: int, bands: int) -> int:
+    """Bits per SimHash band — the one bands-divide-bits refusal. The
+    near-dup maintainers call it when they build their scheme, so a bad
+    geometry refuses before any table is read."""
+    if bits % bands != 0:
+        raise ValueError(f"simhash: bands ({bands}) must divide bits ({bits})")
+    return bits // bands
+
+
 def simhash_band_rows(
     fps: DataFrame, id_col: str, bits: int, bands: int
 ) -> DataFrame:
@@ -1383,10 +1392,8 @@ def simhash_band_rows(
     maintainer (``incremental_simhash_pairs``) and the streaming sink:
     both write the same fp_table, so their band key spaces must stay
     bit-identical by construction, not by parallel maintenance of two
-    copies. ``bands`` must divide ``bits`` (refused here, once)."""
-    if bits % bands != 0:
-        raise ValueError("simhash_band_rows: bands must divide bits")
-    width = bits // bands
+    copies. ``bands`` must divide ``bits``."""
+    width = _simhash_band_width(bits, bands)
     band_arr = F.array(
         *[
             F.shiftright(F.col("simhash"), i * width).bitwiseAND(

@@ -141,8 +141,11 @@ class StreamRegistry:
         [MED], SURVEY §3 E1): if another writer saved the registry
         since we last loaded/saved it, committing our snapshot would
         silently drop their watermarks/latest pointers — raise instead
-        (the caller reloads and retries). Metadata-only writers
-        (ensure_stream etc.) keep last-writer-wins semantics."""
+        (the caller reloads and retries). The append path calls
+        ``check_unchanged`` before it writes any row and then saves
+        with ``expect_unchanged=True``, so a refused append has written
+        nothing. Metadata-only writers (ensure_stream etc.) keep
+        last-writer-wins semantics."""
         if expect_unchanged:
             self.check_unchanged()
         os.makedirs(self.root, exist_ok=True)

@@ -32,12 +32,22 @@ A compaction that rewrites the same rows therefore shows as
 delete+insert — identical to Delta CDC without the CDF sidecar; the
 append-only paths this engine uses for datapoints never rewrite, so
 their feed is pure inserts.
+
+Near-duplicate maintenance is one step over a banding scheme
+(``_BandScheme``), of which MinHash-LSH and SimHash are the two values:
+``_maintain`` nets a range, appends the new docs' band rows and the
+tombstones of deleted docs in one commit, and ``_band_pairs`` joins the
+rows it wrote against the stored ones. ``incremental_lsh_pairs`` and
+``incremental_simhash_pairs`` build their scheme and run that step;
+the streaming sinks (``streaming/sink.py``) reuse the scheme and the
+join.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -412,21 +422,140 @@ def incremental_ivf_assign(
     )
 
 
-#: Geometry metadata carried as constant columns on every band-table
-#: row (constant columns RLE-compress to nothing in parquet). The
-#: band keys of two different geometries/hash-families live in
-#: disjoint spaces, so folding a delta banded one way into a table
-#: banded another silently loses every cross pair — the metadata
-#: makes the mismatch a loud refusal instead.
-_BAND_META = ("_num_hashes", "_rows_per_band", "_shingle_k", "_portable")
-
-
 #: Marker band id for tombstone rows in maintained band/fingerprint
 #: tables. Real bands are always >= 0, so markers share the table's
 #: schema (and geometry metadata) without colliding with any band key;
 #: pair emission treats a marker's doc id as dead (anti-join) until
 #: ``compact_band_tombstones`` physically purges its rows.
 TOMBSTONE_BAND = -1
+
+
+class _BandScheme(NamedTuple):
+    """A near-duplicate signature scheme as the maintenance step sees
+    it. MinHash-LSH (``_lsh_scheme``) and SimHash (``_simhash_scheme``)
+    are the two values; the CDC step (``_maintain``), the streaming
+    sink step (``streaming.sink._near_dup_sink``) and the band join
+    (``_band_pairs``) are written once over it.
+
+    A stored row is ``(id_col, *markers, *meta)``. ``markers`` names the
+    stored columns in order, each with the value a tombstone row holds
+    (``band`` is always one, ``TOMBSTONE_BAND`` there). ``meta`` is the
+    geometry, stored as constant columns: band keys of two geometries
+    or hash families live in disjoint spaces, so ``check_geometry``
+    refuses a mismatch instead of silently losing every cross pair.
+    Two rows collide when they share ``band`` and ``key``; ``fp``, when
+    set, rides through the join as ``_fp_x``/``_fp_y``. ``finish`` turns
+    the ``(id_a, id_b[, _fp_x, _fp_y])`` collisions into the output,
+    whose count column is ``count_col``."""
+
+    id_col: str
+    meta: dict
+    band_rows: Callable[[DataFrame], DataFrame]
+    markers: dict
+    key: str
+    fp: str | None
+    count_col: str
+    finish: Callable[[DataFrame], DataFrame]
+
+    def meta_cols(self) -> list:
+        return [F.lit(v).alias(k) for k, v in self.meta.items()]
+
+    def stored(self, docs: DataFrame) -> DataFrame:
+        """``docs`` banded into stored rows."""
+        return self.band_rows(docs).select(
+            self.id_col, *self.markers, *self.meta_cols()
+        )
+
+
+def _lsh_scheme(
+    id_col: str,
+    text_col: str = "text",
+    num_hashes: int = 32,
+    rows_per_band: int = 4,
+    shingle_k: int = 3,
+    portable_hash: bool = True,
+) -> _BandScheme:
+    """MinHash-LSH: rows ``(id, band, band_hash)``; a pair's output is
+    the number of bands it shares. The join alone (``pairs_from_bands``)
+    needs no geometry, hence the defaults."""
+    from ..operators.dedup import band_key_frame, minhash_signature_arrays
+
+    def band_rows(docs: DataFrame) -> DataFrame:
+        arrays = minhash_signature_arrays(
+            docs,
+            id_col,
+            text_col,
+            num_hashes=num_hashes,
+            shingle_k=shingle_k,
+            portable_hash=portable_hash,
+        )
+        return band_key_frame(arrays, id_col, rows_per_band)
+
+    return _BandScheme(
+        id_col=id_col,
+        meta={
+            "_num_hashes": int(num_hashes),
+            "_rows_per_band": int(rows_per_band),
+            "_shingle_k": int(shingle_k),
+            "_portable": bool(portable_hash),
+        },
+        band_rows=band_rows,
+        markers={
+            "band": F.lit(TOMBSTONE_BAND).cast("int"),
+            "band_hash": F.lit(""),
+        },
+        key="band_hash",
+        fp=None,
+        count_col="n_shared_bands",
+        finish=lambda pairs: pairs.groupBy("id_a", "id_b").agg(
+            F.count(F.lit(1)).alias("n_shared_bands")
+        ),
+    )
+
+
+def _simhash_scheme(
+    id_col: str,
+    text_col: str = "text",
+    bits: int = 60,
+    bands: int = 4,
+    max_hamming: int = 3,
+) -> _BandScheme:
+    """SimHash: rows ``(id, simhash, band, band_val)``; a colliding
+    pair is output once, with its exact Hamming distance, when that is
+    at most ``max_hamming`` (query-time: rows carry full fingerprints,
+    so only ``(bits, bands)`` is stored geometry). Refuses a ``bands``
+    that does not divide ``bits`` here, before any table is read."""
+    from ..operators.dedup import _simhash_band_width, simhash, simhash_band_rows
+
+    _simhash_band_width(bits, bands)
+
+    def band_rows(docs: DataFrame) -> DataFrame:
+        fps = simhash(docs, id_col=id_col, text_col=text_col, bits=bits)
+        return simhash_band_rows(fps, id_col, bits, bands)
+
+    def finish(pairs: DataFrame) -> DataFrame:
+        hm = F.bit_count(F.col("_fp_x").bitwiseXOR(F.col("_fp_y")))
+        return (
+            pairs.select("id_a", "id_b", hm.alias("_hm"))
+            .distinct()
+            .where(F.col("_hm") <= max_hamming)
+            .select("id_a", "id_b", F.col("_hm").cast("long").alias("hamming"))
+        )
+
+    return _BandScheme(
+        id_col=id_col,
+        meta={"_bits": int(bits), "_bands": int(bands)},
+        band_rows=band_rows,
+        markers={
+            "simhash": F.lit(0).cast("bigint"),
+            "band": F.lit(TOMBSTONE_BAND).cast("int"),
+            "band_val": F.lit(0).cast("bigint"),
+        },
+        key="band_val",
+        fp="simhash",
+        count_col="hamming",
+        finish=finish,
+    )
 
 
 def _net_delta(delta: DataFrame, id_col: str):
@@ -505,28 +634,6 @@ def _verify_final_snapshot(
         )
 
 
-def _empty_pairs(src: DataFrame, id_col: str, count_col: str) -> DataFrame:
-    """Zero-row pairs frame with the maintainer's output schema
-    ``(id_a, id_b, <count_col> BIGINT)`` — the shared shape of every
-    "nothing new to pair" exit (pure-removal ranges, tokenless
-    deltas)."""
-    return (
-        src.select(F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"))
-        .withColumn(count_col, F.lit(0).cast("long"))
-        .limit(0)
-    )
-
-
-def _with_meta(bands, band_cols, meta: dict, id_col: str):
-    """Band rows + constant geometry metadata columns (None passes
-    through) — the stored-table projection of both maintainers."""
-    if bands is None:
-        return None
-    return bands.select(
-        id_col, *band_cols, *[F.lit(v).alias(k) for k, v in meta.items()]
-    )
-
-
 #: shared duplicate-id refusal wording (the _check_unique_ids message,
 #: kept verbatim so callers and tests match either gate site)
 _DUP_IDS_MSG = (
@@ -541,17 +648,13 @@ _DUP_IDS_MSG = (
 def _net_docs_and_markers(
     delta: DataFrame,
     old: DataFrame | None,
-    id_col: str,
-    band_rows_fn,
+    scheme: _BandScheme,
     *,
-    band_cols: tuple,
-    marker_cols: dict,
-    meta: dict,
     opname: str,
     final_docs: DataFrame | None = None,
     check_unique_ids: bool = True,
 ):
-    """Shared delete-aware netting of the two near-dup maintainers:
+    """Delete-aware netting of the near-dup CDC step:
     returns ``(docs, markers)`` where docs are the genuinely-new rows
     to band (None if the range adds nothing bandable) and markers are
     tombstone rows in the band-table schema for net-deleted ids (None
@@ -574,6 +677,7 @@ def _net_docs_and_markers(
     delete-bearing one; NULL-id DELETE rows need no gate — a NULL-id
     doc was never banded, so netting dropping its delete is the
     correct no-op)."""
+    id_col = scheme.id_col
     probe = delta.agg(
         F.max(F.when(F.col("_change_type") == DELETE, F.lit(1))).alias("_hd"),
         F.count(F.when(F.col("_change_type") == INSERT, F.lit(1))).alias(
@@ -704,14 +808,14 @@ def _net_docs_and_markers(
             # (the recomputed banding is the dominant cost of a
             # scattered takedown; re-deriving it doubles the step)
             surv = (
-                band_rows_fn(survivors)
-                .select(id_col, *band_cols)
+                scheme.band_rows(survivors)
+                .select(id_col, *scheme.markers)
                 .localCheckpoint(eager=True)
             )
             stored_surv = (
                 old.where(F.col("band") >= 0)
                 .join(survivors.select(id_col).distinct(), id_col, "semi")
-                .select(id_col, *band_cols)
+                .select(id_col, *scheme.markers)
                 .localCheckpoint(eager=True)
             )
             if (
@@ -730,19 +834,10 @@ def _net_docs_and_markers(
         to_mark = net_deleted.join(stored_ids, id_col, "semi")
     markers = None
     if to_mark is not None and to_mark.limit(1).count() > 0:
-        fills = dict(marker_cols)
-        cols = [
-            (
-                F.lit(TOMBSTONE_BAND).cast("int").alias("band")
-                if c == "band"
-                else fills[c].alias(c)
-            )
-            for c in band_cols
-        ]
         markers = to_mark.select(
             F.col(id_col),
-            *cols,
-            *[F.lit(v).alias(k) for k, v in meta.items()],
+            *[v.alias(c) for c, v in scheme.markers.items()],
+            *scheme.meta_cols(),
         )
     if docs.limit(1).count() == 0:
         docs = None
@@ -876,16 +971,15 @@ def compact_band_tombstones(
     return n
 
 
-def check_geometry(
-    old: DataFrame | None, meta_cols: tuple, meta: dict, opname: str
-) -> None:
-    """Shared geometry/hash-family refusal: keys of two different
-    geometries live in disjoint spaces, so a mismatched maintenance
-    call silently loses every cross pair — refuse loudly instead.
-    Public: the streaming LSH sink shares this contract."""
+def check_geometry(old: DataFrame | None, meta: dict, opname: str) -> None:
+    """Geometry/hash-family refusal of the near-dup maintenance steps:
+    keys of two different geometries live in disjoint spaces, so a
+    mismatched maintenance call silently loses every cross pair —
+    refuse loudly instead. ``meta`` maps the stored metadata columns to
+    the values this call would write."""
     if old is None:
         return
-    stored = old.select(*meta_cols).limit(1).collect()
+    stored = old.select(*meta).limit(1).collect()
     if stored and stored[0].asDict() != meta:
         raise ValueError(
             f"{opname}: maintained-table geometry/family mismatch — "
@@ -908,6 +1002,109 @@ def _refuse_null_ids(docs: DataFrame, id_col: str, opname: str) -> None:
             "drop out of the maintainer's equi-joins silently. Fix the "
             "ingest."
         )
+
+
+def _maintain(
+    scheme: _BandScheme,
+    opname: str,
+    docs_table: ManifestedTable,
+    band_table: ManifestedTable,
+    since: int | None,
+    *,
+    check_unique_ids: bool,
+    until: int | None,
+    verify_snapshot: bool,
+) -> DataFrame | None:
+    """The CDC maintenance step of both near-dup maintainers: net the
+    docs table's changes in ``(since, until]``, append the new docs'
+    stored rows and the tombstones to ``band_table`` in one commit
+    based on the version read, and join the rows read back from that
+    commit against the stored rows."""
+    id_col = scheme.id_col
+    delta = table_changes(docs_table, since=since, until=until)
+    if delta is None:
+        return None
+    v_prev = band_table.current_version()
+    old = band_table.read(v_prev) if v_prev is not None else None
+    check_geometry(old, scheme.meta, opname)
+    final_docs = None
+    if verify_snapshot:
+        uv = until if until is not None else docs_table.current_version()
+        final_docs = docs_table.read(uv).select(id_col)
+    docs, markers = _net_docs_and_markers(
+        delta, old, scheme,
+        opname=opname,
+        final_docs=final_docs,
+        check_unique_ids=check_unique_ids,
+    )
+    if docs is None and markers is None:
+        return None  # range netted to nothing bandable
+    to_append = markers
+    if docs is not None:
+        to_append = scheme.stored(docs)
+        if markers is not None:
+            to_append = to_append.unionByName(markers)
+    band_table.append(to_append, expected_base=v_prev)
+    # Read the banding back from the files the commit just wrote: the
+    # signature projection runs once, and both joins consume columnar
+    # parquet instead of re-deriving the lineage per branch.
+    fresh = table_changes(band_table, since=v_prev) if docs is not None else None
+    if fresh is None:
+        # a pure-removal range (markers only), or docs that all band to
+        # nothing (shorter than shingle_k, tokenless) so the commit
+        # named no new files: no new pairs, in the output schema
+        return to_append.select(
+            F.col(id_col).alias("id_a"),
+            F.col(id_col).alias("id_b"),
+            F.lit(0).cast("long").alias(scheme.count_col),
+        ).limit(0)
+    return _band_pairs(scheme, fresh, old)
+
+
+def _band_pairs(
+    scheme: _BandScheme, delta: DataFrame, old: DataFrame | None
+) -> DataFrame:
+    """The band join of both near-dup maintainers: the delta's rows
+    against themselves (``id_a < id_b``) and against the stored rows
+    (ids ordered by ``least``/``greatest``), then ``scheme.finish``.
+
+    Tombstone-aware: marker rows (``band == TOMBSTONE_BAND``) in either
+    input name dead doc ids and both sides drop them, so a takedown
+    stops pairing the moment its marker commits, with no physical
+    rewrite on the hot path (that is ``compact_band_tombstones``' job).
+    Tables with no markers pay one anti-join against an empty frame
+    (AQE collapses it)."""
+    id_col = scheme.id_col
+    tomb = delta.where(F.col("band") == TOMBSTONE_BAND).select(id_col)
+    if old is not None:
+        tomb = tomb.unionByName(
+            old.where(F.col("band") == TOMBSTONE_BAND).select(id_col)
+        )
+    cols = {"_id": id_col, "_b": "band", "_k": scheme.key}
+    if scheme.fp is not None:
+        cols["_fp"] = scheme.fp
+    fp = ["_fp_x", "_fp_y"] if scheme.fp is not None else []
+
+    def live(rows: DataFrame, tag: str) -> DataFrame:
+        return (
+            rows.where(F.col("band") >= 0)
+            .join(tomb, id_col, "left_anti")
+            .select(*[F.col(c).alias(n + tag) for n, c in cols.items()])
+        )
+
+    fresh = live(delta, "_x")
+    same_band = (F.col("_b_x") == F.col("_b_y")) & (F.col("_k_x") == F.col("_k_y"))
+    pairs = fresh.join(
+        live(delta, "_y"), same_band & (F.col("_id_x") < F.col("_id_y"))
+    ).select(F.col("_id_x").alias("id_a"), F.col("_id_y").alias("id_b"), *fp)
+    if old is not None:
+        cross = fresh.join(live(old, "_y"), same_band).select(
+            F.least("_id_x", "_id_y").alias("id_a"),
+            F.greatest("_id_x", "_id_y").alias("id_b"),
+            *fp,
+        )
+        pairs = pairs.unionByName(cross)
+    return scheme.finish(pairs)
 
 
 def incremental_lsh_pairs(
@@ -989,69 +1186,18 @@ def incremental_lsh_pairs(
     time over the maintained table if needed — maintenance never drops
     rows. Returns None (and commits nothing) on an empty range.
     """
-    from ..operators.dedup import band_key_frame, minhash_signature_arrays
-
-    delta = table_changes(docs_table, since=since, until=until)
-    if delta is None:
-        return None
-    meta = {
-        "_num_hashes": int(num_hashes),
-        "_rows_per_band": int(rows_per_band),
-        "_shingle_k": int(shingle_k),
-        "_portable": bool(portable_hash),
-    }
-    v_prev = band_table.current_version()
-    old = band_table.read(v_prev) if v_prev is not None else None
-    check_geometry(old, _BAND_META, meta, "incremental_lsh_pairs")
-
-    def band_rows(d: DataFrame) -> DataFrame:
-        arrays = minhash_signature_arrays(
-            d,
-            id_col,
-            text_col,
-            num_hashes=num_hashes,
-            shingle_k=shingle_k,
-            portable_hash=portable_hash,
-        )
-        return band_key_frame(arrays, id_col, rows_per_band)
-
-    final_docs = None
-    if verify_snapshot:
-        uv = until if until is not None else docs_table.current_version()
-        final_docs = docs_table.read(uv).select(id_col)
-    docs, markers = _net_docs_and_markers(
-        delta, old, id_col, band_rows,
-        band_cols=("band", "band_hash"),
-        marker_cols={"band_hash": F.lit("")},
-        meta=meta,
-        opname="incremental_lsh_pairs",
-        final_docs=final_docs,
+    return _maintain(
+        _lsh_scheme(
+            id_col, text_col, num_hashes, rows_per_band, shingle_k, portable_hash
+        ),
+        "incremental_lsh_pairs",
+        docs_table,
+        band_table,
+        since,
         check_unique_ids=check_unique_ids,
+        until=until,
+        verify_snapshot=verify_snapshot,
     )
-    if docs is None and markers is None:
-        return None  # range netted to nothing bandable
-    delta_bands = (
-        band_rows(docs) if docs is not None else None
-    )
-    to_append = _with_meta(delta_bands, ("band", "band_hash"), meta, id_col)
-    if markers is not None:
-        to_append = (
-            markers if to_append is None else to_append.unionByName(markers)
-        )
-    band_table.append(to_append, expected_base=v_prev)
-    if delta_bands is None:
-        # pure-removal range: markers committed, no new docs, no pairs
-        return _empty_pairs(to_append, id_col, "n_shared_bands")
-    # Read the banding back from the files the commit just wrote: the
-    # signature projection runs once, and both joins below consume
-    # columnar parquet instead of re-deriving the lineage per branch.
-    fresh_src = table_changes(band_table, since=v_prev)
-    if fresh_src is None:
-        # the delta produced zero band rows (every doc shorter than
-        # shingle_k) and the commit named no new files: no new pairs,
-        # stated with the correct schema instead of an AttributeError
-        return _empty_pairs(delta_bands, id_col, "n_shared_bands")
-    return pairs_from_bands(fresh_src, old, id_col)
 
 
 def pairs_from_bands(
@@ -1059,67 +1205,11 @@ def pairs_from_bands(
     old_bands: DataFrame | None,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """New candidate pairs from a delta's band rows against (optional)
-    stored band rows: (delta x delta with id_a < id_b) ∪ (delta x
-    stored, ids ordered), counted per pair into ``n_shared_bands``.
-    The pure join core shared by ``incremental_lsh_pairs`` (CDC path)
-    and the streaming LSH sink — one definition, no drift. Both inputs
-    need only (id_col, band, band_hash); extra columns are ignored.
-
-    Tombstone-aware: marker rows (``band == TOMBSTONE_BAND``) in
-    either input name dead doc ids — both join sides drop them, so a
-    takedown stops pairing the moment its marker commits, with no
-    physical rewrite on the hot path (that's ``compact_band_
-    tombstones``' job). Tables with no markers pay one anti-join
-    against an empty frame (AQE collapses it)."""
-    tomb = delta_bands.where(F.col("band") == TOMBSTONE_BAND).select(id_col)
-    if old_bands is not None:
-        tomb = tomb.unionByName(
-            old_bands.where(F.col("band") == TOMBSTONE_BAND).select(id_col)
-        )
-        old_bands = old_bands.where(F.col("band") >= 0).join(
-            tomb, id_col, "left_anti"
-        )
-    fresh = (
-        delta_bands.where(F.col("band") >= 0)
-        .join(tomb, id_col, "left_anti")
-        .select(F.col(id_col).alias("_fid"), "band", "band_hash")
-    )
-    self_pairs = fresh.join(
-        fresh.select(
-            F.col("_fid").alias("_fid2"),
-            F.col("band").alias("_b2"),
-            F.col("band_hash").alias("_bh2"),
-        ),
-        (F.col("band") == F.col("_b2"))
-        & (F.col("band_hash") == F.col("_bh2"))
-        & (F.col("_fid") < F.col("_fid2")),
-    ).select(F.col("_fid").alias("id_a"), F.col("_fid2").alias("id_b"))
-    both = self_pairs
-    if old_bands is not None:
-        cross = fresh.join(
-            old_bands.select(
-                F.col(id_col).alias("_oid"),
-                F.col("band").alias("_ob"),
-                F.col("band_hash").alias("_obh"),
-            ),
-            (F.col("band") == F.col("_ob"))
-            & (F.col("band_hash") == F.col("_obh")),
-        ).select(
-            F.least("_fid", "_oid").alias("id_a"),
-            F.greatest("_fid", "_oid").alias("id_b"),
-        )
-        both = both.unionByName(cross)
-    return both.groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).alias("n_shared_bands")
-    )
-
-
-#: SimHash geometry metadata on every fingerprint-table row — same
-#: loud-refusal doctrine as _BAND_META: band values of two different
-#: (bits, bands) geometries live in disjoint spaces, so a mismatched
-#: maintenance call must refuse rather than silently lose cross pairs.
-_SH_META = ("_bits", "_bands")
+    """New MinHash-LSH candidate pairs ``(id_a, id_b, n_shared_bands)``
+    of a delta's band rows against (optional) stored band rows:
+    ``_band_pairs`` with the LSH scheme. Inputs need (id_col, band,
+    band_hash); extra columns are ignored."""
+    return _band_pairs(_lsh_scheme(id_col), delta_bands, old_bands)
 
 
 def incremental_simhash_pairs(
@@ -1136,91 +1226,43 @@ def incremental_simhash_pairs(
     until: int | None = None,
     verify_snapshot: bool = False,
 ) -> DataFrame | None:
-    """Incremental SimHash near-dup maintenance — the SimHash twin of
-    ``incremental_lsh_pairs``, completing the maintenance family for
-    BOTH near-dup estimators: fingerprint ONLY the delta docs, fold
-    their banded fingerprint rows into the materialized ``fp_table``,
-    and return the NEW pairs ``(id_a, id_b, hamming)`` with at least
-    one delta member, refined to ``hamming <= max_hamming``.
-    Fingerprints are content-stable pure functions of the text (md5
-    bit votes — no hash-family parameter to mismatch), so the same
-    delta-banding theorem applies and the parity test pins
+    """Incremental SimHash near-dup maintenance — the maintenance step
+    of ``incremental_lsh_pairs`` with the SimHash scheme: fingerprint
+    ONLY the delta docs, fold their banded fingerprint rows into the
+    materialized ``fp_table``, and return the NEW pairs ``(id_a, id_b,
+    hamming)`` with at least one delta member, refined to ``hamming <=
+    max_hamming``. Fingerprints are content-stable pure functions of
+    the text (md5 bit votes — no hash-family parameter to mismatch), so
+    the same delta-banding theorem applies and the parity test pins
     maintenance == from-scratch ``simhash_candidate_pairs`` on the
     unioned corpus.
 
     Geometry rides as constant columns (``_bits``, ``_bands``) and a
-    mismatched call refuses loudly; ``max_hamming`` is a QUERY-TIME
+    mismatched call refuses loudly; ``bands`` must divide ``bits``
+    (refused before any table is read); ``max_hamming`` is a QUERY-TIME
     refinement (the stored rows carry full fingerprints), so it may
-    vary call-to-call without a rebuild — only (bits, bands) are
-    table-fixed. Contracts otherwise identical to
-    ``incremental_lsh_pairs``, INCLUDING the round-8 delete support:
-    net-removal ranges tombstone the dead ids (markers anti-joined at
-    pair emission, purged by ``compact_band_tombstones``), rewrite
-    survivors verify fingerprint-exact and skip, in-range updates
-    refuse. Ids unique across the table's life (one cheap check,
-    disable via ``check_unique_ids=False``; ``verify_snapshot=True``
-    adds the O(corpus) final-snapshot multiplicity cross-check for
-    corpora where per-commit maintenance wasn't guaranteed — see
-    ``incremental_lsh_pairs``), bootstrap with ``since=None``,
-    ``None`` returned (nothing committed) on an empty range.
+    vary call-to-call without a rebuild. Every other contract is
+    ``incremental_lsh_pairs``': delete support (net-removal ranges
+    tombstone the dead ids, rewrite survivors verify fingerprint-exact
+    and skip, in-range updates refuse), ids unique across the table's
+    life (``check_unique_ids``), ``verify_snapshot``, bootstrap with
+    ``since=None``, ``None`` returned (nothing committed) on an empty
+    range.
 
     Scale: the delta is the only text ever tokenized; the stored side
     is a 4-column scan (id, fp, band, band_val) equi-joined on
     (band, band_val) — AQE broadcasts an ingest-sized delta, the
     fingerprint table never shuffles.
     """
-    from ..operators.dedup import simhash, simhash_band_rows
-
-    if bits % bands != 0:
-        raise ValueError("incremental_simhash_pairs: bands must divide bits")
-    delta = table_changes(docs_table, since=since, until=until)
-    if delta is None:
-        return None
-    meta = {"_bits": int(bits), "_bands": int(bands)}
-    v_prev = fp_table.current_version()
-    old = fp_table.read(v_prev) if v_prev is not None else None
-    check_geometry(old, _SH_META, meta, "incremental_simhash_pairs")
-
-    def fp_rows(d: DataFrame) -> DataFrame:
-        fps = simhash(d, id_col=id_col, text_col=text_col, bits=bits)
-        return simhash_band_rows(fps, id_col, bits, bands)
-
-    final_docs = None
-    if verify_snapshot:
-        uv = until if until is not None else docs_table.current_version()
-        final_docs = docs_table.read(uv).select(id_col)
-    docs, markers = _net_docs_and_markers(
-        delta, old, id_col, fp_rows,
-        band_cols=("simhash", "band", "band_val"),
-        marker_cols={
-            "simhash": F.lit(0).cast("bigint"),
-            "band_val": F.lit(0).cast("bigint"),
-        },
-        meta=meta,
-        opname="incremental_simhash_pairs",
-        final_docs=final_docs,
+    return _maintain(
+        _simhash_scheme(id_col, text_col, bits, bands, max_hamming),
+        "incremental_simhash_pairs",
+        docs_table,
+        fp_table,
+        since,
         check_unique_ids=check_unique_ids,
-    )
-    if docs is None and markers is None:
-        return None
-    delta_rows = fp_rows(docs) if docs is not None else None
-    to_append = _with_meta(
-        delta_rows, ("simhash", "band", "band_val"), meta, id_col
-    )
-    if markers is not None:
-        to_append = (
-            markers if to_append is None else to_append.unionByName(markers)
-        )
-    fp_table.append(to_append, expected_base=v_prev)
-    if delta_rows is None:
-        # pure-removal range: markers committed, no new docs, no pairs
-        return _empty_pairs(to_append, id_col, "hamming")
-    fresh_src = table_changes(fp_table, since=v_prev)
-    if fresh_src is None:
-        # delta produced zero fingerprint rows (every doc tokenless)
-        return _empty_pairs(delta_rows, id_col, "hamming")
-    return simhash_pairs_from_bands(
-        fresh_src, old, id_col, max_hamming=max_hamming
+        until=until,
+        verify_snapshot=verify_snapshot,
     )
 
 
@@ -1231,68 +1273,10 @@ def simhash_pairs_from_bands(
     *,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """New SimHash pairs from a delta's banded fingerprint rows against
-    (optional) stored rows: (delta x delta, id_a < id_b) ∪ (delta x
-    stored, ids ordered), distinct, refined by exact xor-bit_count
-    hamming. Hamming is computed BEFORE id ordering (it is symmetric),
-    so least/greatest never detaches a fingerprint from its id. The
-    shared join core for the CDC maintainer and a streaming twin.
-    Inputs need (id_col, simhash, band, band_val); extras ignored.
-    Tombstone-aware like ``pairs_from_bands``: marker rows
-    (``band == TOMBSTONE_BAND``) in either input name dead ids and
-    both sides drop them."""
-    tomb = delta_rows.where(F.col("band") == TOMBSTONE_BAND).select(id_col)
-    if old_rows is not None:
-        tomb = tomb.unionByName(
-            old_rows.where(F.col("band") == TOMBSTONE_BAND).select(id_col)
-        )
-        old_rows = old_rows.where(F.col("band") >= 0).join(
-            tomb, id_col, "left_anti"
-        )
-    fresh = (
-        delta_rows.where(F.col("band") >= 0)
-        .join(tomb, id_col, "left_anti")
-        .select(
-            F.col(id_col).alias("_fid"),
-            F.col("simhash").alias("_ffp"),
-            "band",
-            "band_val",
-        )
-    )
-    self_pairs = fresh.join(
-        fresh.select(
-            F.col("_fid").alias("_fid2"),
-            F.col("_ffp").alias("_ffp2"),
-            F.col("band").alias("_b2"),
-            F.col("band_val").alias("_bv2"),
-        ),
-        (F.col("band") == F.col("_b2"))
-        & (F.col("band_val") == F.col("_bv2"))
-        & (F.col("_fid") < F.col("_fid2")),
-    ).select(
-        F.col("_fid").alias("id_a"),
-        F.col("_fid2").alias("id_b"),
-        F.bit_count(F.col("_ffp").bitwiseXOR(F.col("_ffp2"))).alias("_hm"),
-    )
-    both = self_pairs
-    if old_rows is not None:
-        cross = fresh.join(
-            old_rows.select(
-                F.col(id_col).alias("_oid"),
-                F.col("simhash").alias("_ofp"),
-                F.col("band").alias("_ob"),
-                F.col("band_val").alias("_obv"),
-            ),
-            (F.col("band") == F.col("_ob"))
-            & (F.col("band_val") == F.col("_obv")),
-        ).select(
-            F.least("_fid", "_oid").alias("id_a"),
-            F.greatest("_fid", "_oid").alias("id_b"),
-            F.bit_count(F.col("_ffp").bitwiseXOR(F.col("_ofp"))).alias("_hm"),
-        )
-        both = both.unionByName(cross)
-    return (
-        both.distinct()
-        .where(F.col("_hm") <= max_hamming)
-        .select("id_a", "id_b", F.col("_hm").cast("long").alias("hamming"))
+    """New SimHash pairs ``(id_a, id_b, hamming)`` of a delta's banded
+    fingerprint rows against (optional) stored rows: ``_band_pairs``
+    with the SimHash scheme. Inputs need (id_col, simhash, band,
+    band_val); extra columns are ignored."""
+    return _band_pairs(
+        _simhash_scheme(id_col, max_hamming=max_hamming), delta_rows, old_rows
     )

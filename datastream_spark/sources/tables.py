@@ -13,9 +13,9 @@ Layout under a store root:
 - ``rollup_<granularity>/`` the materialized ladder, partitioned by
                            ``p_date`` of the bucket
 
-At 100 TB: date partitions bound every incremental job's input; the
-optional ``stream_bucket`` column (hash(stream_id) % N) is the hook for
-bucketing/co-location so per-stream windows avoid a full shuffle.
+At 100 TB: date partitions bound every incremental job's input;
+``TableStore.write_bucketed`` is the hook for bucketing/co-location so
+per-stream windows avoid a full shuffle.
 
 Reads are planned once per table version: every table is read with a
 declared schema (``table_schema``), so no schema-inference job runs, and
@@ -54,7 +54,6 @@ _STREAM_ID = T.StructField("stream_id", T.StringType())
 DATAPOINTS_SCHEMA = T.StructType(
     [
         *(T.StructField(f.name, f.dataType) for f in RAW_SCHEMA),
-        T.StructField("stream_bucket", T.IntegerType()),
         _P_DATE,
     ]
 )
@@ -151,16 +150,8 @@ class TableStore:
         _HANDLES.pop((self.spark, os.path.abspath(self.path(table))), None)
 
     def append_raw(self, df: DataFrame) -> None:
-        """Append datapoints, adding the date partition and bucket cols."""
-        out = (
-            df.withColumn("p_date", F.to_date("ts").cast("string"))
-            .withColumn(
-                "stream_bucket",
-                F.pmod(F.xxhash64("stream_id"), F.lit(self.n_stream_buckets)).cast(
-                    "int"
-                ),
-            )
-        )
+        """Append datapoints, adding the date partition column."""
+        out = df.withColumn("p_date", F.to_date("ts").cast("string"))
         out.write.mode("append").partitionBy("p_date").parquet(self.path("datapoints"))
         self.invalidate("datapoints")
 
@@ -261,7 +252,8 @@ class TableStore:
 
         Bucket count should track the executor fleet (more buckets =
         finer parallelism, smaller files); defaults to the store's
-        ``n_stream_buckets``.
+        ``n_stream_buckets``, which is only this default — raw rows
+        carry no bucket column.
         """
         n = n_buckets or self.n_stream_buckets
         writer = df.write.mode("overwrite").format("parquet").bucketBy(

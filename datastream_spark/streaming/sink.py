@@ -24,14 +24,26 @@ One writer per (table, sink_id) — the usual foreachBatch discipline;
 distinct sinks (or batch writers, which never set the marker) may
 interleave commits safely because the marker lookup matches on
 ``sink_id``, not on position.
+
+The near-duplicate sinks are one step, ``_near_dup_sink``, over the
+banding scheme of ``sources/cdc.py``: ``lsh_streaming_sink`` and
+``simhash_streaming_sink`` build their scheme and run it, so each
+batch is banded and joined exactly as the CDC maintainers do it.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from ..sources.cdc import (
+    _band_pairs,
+    _BandScheme,
+    _lsh_scheme,
+    _simhash_scheme,
+    check_geometry,
+)
 from ..sources.manifest import ManifestedTable
 
 __all__ = [
@@ -164,81 +176,24 @@ def lsh_streaming_sink(
     band rows exactly as in ``incremental_lsh_pairs`` AND is checked
     against the stored table once per sink instance — a restart with
     a different geometry/family refuses loudly instead of silently
-    losing every cross pair with the pre-restart corpus. The hot path
-    shares its join core (``pairs_from_bands``). One writer per
+    losing every cross pair with the pre-restart corpus. The step is
+    the SimHash sink's, with the LSH scheme. One writer per
     (tables, sink_id). Doc ids must be unique across the stream's
     life — the streaming ingest is the id authority here, so unlike
     the CDC maintainer there is no per-batch re-use check (it would
     cost a semi-join per trigger); route through
     ``incremental_lsh_pairs`` if the ingest cannot guarantee it.
     """
-    from ..operators.dedup import band_key_frame, minhash_signature_arrays
-    from ..sources.cdc import _BAND_META, check_geometry, pairs_from_bands
-
-    meta = {
-        "_num_hashes": int(num_hashes),
-        "_rows_per_band": int(rows_per_band),
-        "_shingle_k": int(shingle_k),
-        "_portable": bool(portable_hash),
-    }
-    put_pairs = _marker_guarded_append(pairs_table, sink_id)
-    put_bands = _marker_guarded_append(band_table, sink_id)
-    put_docs = (
-        _marker_guarded_append(docs_table, sink_id) if docs_table else None
+    return _near_dup_sink(
+        _lsh_scheme(
+            id_col, text_col, num_hashes, rows_per_band, shingle_k, portable_hash
+        ),
+        "lsh_streaming_sink",
+        band_table,
+        pairs_table,
+        docs_table,
+        sink_id,
     )
-    geo_checked = {"done": False}
-    guards = [g for g in (put_pairs, put_bands, put_docs) if g is not None]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if all(g.last() >= int(batch_id) for g in guards):
-            # fully-committed replay (checkpoint lost / restarted):
-            # skip before paying isEmpty, manifest reads, or planning
-            return
-        if batch_df.isEmpty():
-            return
-        if not geo_checked["done"]:
-            # same loud-refusal contract as incremental_lsh_pairs: a
-            # sink restarted with a different geometry/hash family
-            # would band into a disjoint key space and silently lose
-            # every cross pair with the pre-restart corpus. Once per
-            # sink instance (the stored metadata is table-constant).
-            v = band_table.current_version()
-            check_geometry(
-                band_table.read(v) if v is not None else None,
-                _BAND_META,
-                meta,
-                "lsh_streaming_sink",
-            )
-            geo_checked["done"] = True
-        arrays = minhash_signature_arrays(
-            batch_df,
-            id_col,
-            text_col,
-            num_hashes=num_hashes,
-            shingle_k=shingle_k,
-            portable_hash=portable_hash,
-        )
-        # one computation of the batch's bands feeds the pair join AND
-        # the band-table commit (the incremental_lsh_pairs barrier
-        # doctrine, here via non-eager checkpoint)
-        delta_bands = (
-            band_key_frame(arrays, id_col, rows_per_band)
-            .select(
-                id_col,
-                "band",
-                "band_hash",
-                *[F.lit(v).alias(k) for k, v in meta.items()],
-            )
-            .localCheckpoint(eager=False)
-        )
-        old = band_table.read()
-        pairs = pairs_from_bands(delta_bands, old, id_col)
-        put_pairs(pairs, batch_id)
-        put_bands(delta_bands, batch_id)
-        if put_docs is not None:
-            put_docs(batch_df, batch_id)
-
-    return fold
 
 
 def simhash_streaming_sink(
@@ -253,11 +208,11 @@ def simhash_streaming_sink(
     max_hamming: int = 3,
     sink_id: str = "simhash",
 ):
-    """Streaming SimHash near-dup detection — the fingerprint twin of
-    ``lsh_streaming_sink``: per micro-batch, (1) fingerprint ONLY the
-    batch's docs, (2) emit the batch's NEW hamming-refined pairs
-    (batch x stored fingerprints + batch x batch, via the shared
-    ``simhash_pairs_from_bands`` join core) into ``pairs_table``,
+    """Streaming SimHash near-dup detection — the step of
+    ``lsh_streaming_sink`` with the SimHash scheme: per micro-batch,
+    (1) fingerprint ONLY the batch's docs, (2) emit the batch's NEW
+    hamming-refined pairs (batch x stored fingerprints + batch x batch)
+    into ``pairs_table``,
     (3) fold the batch's banded fingerprint rows into ``fp_table``,
     (4) optionally land the raw docs. Same exactly-once construction
     as the LSH sink: per-table (sink_id, batch_id) markers + the
@@ -266,51 +221,62 @@ def simhash_streaming_sink(
     computation never double-joins its own batch's rows. Geometry
     ((bits, bands)) is checked against the stored table once per sink
     instance — a restarted sink with a different geometry refuses
-    loudly; ``max_hamming`` is query-time (rows carry full
+    loudly, and ``bands`` must divide ``bits`` (refused when the sink
+    is built); ``max_hamming`` is query-time (rows carry full
     fingerprints). Doc ids are the ingest's contract, as in the LSH
     sink. One writer per (tables, sink_id).
     """
-    from ..operators.dedup import simhash, simhash_band_rows
-    from ..sources.cdc import _SH_META, check_geometry, simhash_pairs_from_bands
-
-    if bits % bands != 0:
-        raise ValueError("simhash_streaming_sink: bands must divide bits")
-    meta = {"_bits": int(bits), "_bands": int(bands)}
-    put_pairs = _marker_guarded_append(pairs_table, sink_id)
-    put_fps = _marker_guarded_append(fp_table, sink_id)
-    put_docs = (
-        _marker_guarded_append(docs_table, sink_id) if docs_table else None
+    return _near_dup_sink(
+        _simhash_scheme(id_col, text_col, bits, bands, max_hamming),
+        "simhash_streaming_sink",
+        fp_table,
+        pairs_table,
+        docs_table,
+        sink_id,
     )
-    geo_checked = {"done": False}
-    guards = [g for g in (put_pairs, put_fps, put_docs) if g is not None]
+
+
+def _near_dup_sink(
+    scheme: _BandScheme,
+    opname: str,
+    rows_table: ManifestedTable,
+    pairs_table: ManifestedTable,
+    docs_table: ManifestedTable | None,
+    sink_id: str,
+):
+    """The streaming step of both near-dup sinks: a ``foreachBatch``
+    callable that skips a fully committed replay, checks the stored
+    geometry once per sink instance, bands the batch once
+    (``localCheckpoint``), and commits pairs -> rows -> docs, each
+    under its own (sink_id, batch_id) marker. The pairs are computed
+    against ``rows_table`` before this batch's rows land, so a replay
+    after a crash between two commits never joins the batch with
+    itself twice."""
+    put_pairs = _marker_guarded_append(pairs_table, sink_id)
+    put_rows = _marker_guarded_append(rows_table, sink_id)
+    put_docs = (
+        _marker_guarded_append(docs_table, sink_id)
+        if docs_table is not None
+        else None
+    )
+    guards = [g for g in (put_pairs, put_rows, put_docs) if g is not None]
+    geometry_checked = False
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal geometry_checked
         if all(g.last() >= int(batch_id) for g in guards):
-            # fully-committed replay: skip before isEmpty/manifest work
+            # fully-committed replay (checkpoint lost / restarted):
+            # skip before paying isEmpty, manifest reads, or planning
             return
         if batch_df.isEmpty():
             return
-        if not geo_checked["done"]:
-            v = fp_table.current_version()
-            check_geometry(
-                fp_table.read(v) if v is not None else None,
-                _SH_META,
-                meta,
-                "simhash_streaming_sink",
-            )
-            geo_checked["done"] = True
-        fps = simhash(batch_df, id_col=id_col, text_col=text_col, bits=bits)
-        delta_rows = (
-            simhash_band_rows(fps, id_col, bits, bands)
-            .select("*", *[F.lit(v).alias(k) for k, v in meta.items()])
-            .localCheckpoint(eager=False)
-        )
-        old = fp_table.read()
-        pairs = simhash_pairs_from_bands(
-            delta_rows, old, id_col, max_hamming=max_hamming
-        )
-        put_pairs(pairs, batch_id)
-        put_fps(delta_rows, batch_id)
+        if not geometry_checked:
+            # the stored metadata is table-constant: once per instance
+            check_geometry(rows_table.read(), scheme.meta, opname)
+            geometry_checked = True
+        delta = scheme.stored(batch_df).localCheckpoint(eager=False)
+        put_pairs(_band_pairs(scheme, delta, rows_table.read()), batch_id)
+        put_rows(delta, batch_id)
         if put_docs is not None:
             put_docs(batch_df, batch_id)
 

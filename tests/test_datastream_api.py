@@ -775,7 +775,8 @@ def test_append_contended(spark, store_root):
     b.registry.load()
     b.append(sid, 3.0, T0 + dt.timedelta(seconds=2))
     b.flush()
-    assert len(a.get_data(sid, Granularity.Seconds)) >= 2
+    # the refused flush wrote nothing: its 2.0 is gone, not duplicated
+    assert [p["v"] for p in a.get_data(sid, Granularity.Seconds)] == [1.0, 3.0]
 
 
 def test_reads_leave_the_registry_alone(spark, store_root):
@@ -831,6 +832,43 @@ def test_cascade_and_vacuum_refuse_a_stale_registry(spark, tmp_path):
         a.downsample_streams(until=until)
         assert len(a.get_data(sid, Granularity.Seconds)) == 5, backend
         assert [p["v"]["count"] for p in a.get_data(sid, Granularity.Hours)] == [5]
+
+
+def test_stale_append_dataframe_writes_nothing(spark, tmp_path):
+    """append_dataframe on a handle whose registry another handle has
+    since saved raises StreamAppendContended before it writes: no row
+    lands, and the other handle's new stream and later ``latest_us``
+    survive. After a reload the handle sees both."""
+    import calendar
+
+    from pyspark.sql import functions as F
+
+    later = T0 + dt.timedelta(hours=1)
+    later_us = calendar.timegm(later.timetuple()) * 1_000_000
+    for backend in REGISTRY_BACKENDS:
+        root = str(tmp_path / backend)
+        sid = Datastream(spark, root, registry_backend=backend).ensure_stream(
+            {"name": "x"}
+        )
+        a = Datastream(spark, root, registry_backend=backend)
+        b = Datastream(spark, root, registry_backend=backend)
+        b.append(sid, 1.0, later)
+        b.flush()
+        b.ensure_stream({"name": "other"})
+        at_t0 = spark.createDataFrame(
+            [(sid, calendar.timegm(T0.timetuple()), 2.0)],
+            "stream_id string, e long, value double",
+        ).select("stream_id", F.timestamp_seconds("e").alias("ts"), "value")
+        with pytest.raises(exc.StreamAppendContended):
+            a.append_dataframe(at_t0)
+        fresh = Datastream(spark, root, registry_backend=backend)
+        assert len(list(fresh.find_streams({"name": "other"}))) == 1, backend
+        assert fresh.registry.get(sid).latest_us == later_us, backend
+        assert [p["v"] for p in fresh.get_data(sid, Granularity.Seconds)] == [1.0]
+        assert fresh.store.read("datapoints").count() == 1, backend
+        a.registry.load()
+        with pytest.raises(exc.InvalidTimestamp):
+            a.append_dataframe(at_t0)
 
 
 def test_downsample_consistency_warning(ds):

@@ -1682,6 +1682,54 @@ def test_manifest_append_sink_auto_optimize(spark, tmp_path):
     assert table.current_version() == v
 
 
+@pytest.mark.parametrize("scheme", ["lsh", "simhash"])
+def test_cdc_maintainer_and_sink_store_the_same_rows(spark, tmp_path, scheme):
+    """The CDC maintainer and the streaming sink of one near-dup scheme
+    share its banding: a rows table bootstrapped by
+    ``incremental_*_pairs(since=None)`` and one fed the same documents
+    by the sink as batch 0 are equal row for row, geometry columns
+    included, and so are their pairs."""
+    from datastream_spark.sources import cdc
+    from datastream_spark.sources.manifest import ManifestedTable
+    from datastream_spark.streaming import sink as sinks
+
+    maintain, make_sink, geo, meta = {
+        "lsh": (
+            cdc.incremental_lsh_pairs,
+            sinks.lsh_streaming_sink,
+            dict(num_hashes=8, rows_per_band=4, shingle_k=3, portable_hash=True),
+            {"_num_hashes", "_rows_per_band", "_shingle_k", "_portable"},
+        ),
+        "simhash": (
+            cdc.incremental_simhash_pairs,
+            sinks.simhash_streaming_sink,
+            dict(bits=60, bands=4, max_hamming=3),
+            {"_bits", "_bands"},
+        ),
+    }[scheme]
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta eta theta {i % 4}")
+         for i in range(20)],
+        "doc_id long, text string",
+    )
+    docs_table = ManifestedTable(spark, str(tmp_path / "docs"))
+    docs_table.append(docs)
+    cdc_rows = ManifestedTable(spark, str(tmp_path / "cdc_rows"))
+    sink_rows = ManifestedTable(spark, str(tmp_path / "sink_rows"))
+    sink_pairs = ManifestedTable(spark, str(tmp_path / "sink_pairs"))
+    cdc_pairs = maintain(docs_table, cdc_rows, since=None, **geo)
+    make_sink(sink_rows, sink_pairs, **geo)(docs, 0)
+
+    a, b = cdc_rows.read(), sink_rows.read()
+    assert a.columns == b.columns
+    assert meta <= set(a.columns)
+    assert a.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    p, q = cdc_pairs, sink_pairs.read()
+    assert p.count() > 0
+    assert p.exceptAll(q).count() == 0 and q.exceptAll(p).count() == 0
+
+
 def test_lsh_streaming_sink_parity_and_crash_replay(spark, tmp_path):
     """Streaming near-dup detection: the union of pairs_table over all
     triggers equals from-scratch minhash_candidate_pairs over every
